@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Iceberg round-trip smoke for the web_pages source/sink (run where
-the Iceberg Spark runtime jar IS available — it is not in this
-sandbox; mirrors scripts/onnx_smoke.py / media_smoke.py).
+the Iceberg Spark runtime jar IS available; mirrors
+scripts/onnx_smoke.py).
 
 Exercises exactly what SURVEY §2.1 S1/S6/S7 claim about the Iceberg
 path and the north rule's "Iceberg-style table":

@@ -4,16 +4,29 @@ at module level (none installed here); we stub just enough for the
 module to import — the functions under test (get_span,
 get_bool_ids_greater_than, get_id_and_prob, dbc2sbc, cut_chinese_sent,
 map_offset, unify_prompt_name, SpanEvaluator) are pure Python/NumPy.
+
+Where the reference checkout is absent, ``load_reference_utils()``
+returns None and the parity tests marked ``requires_reference`` skip;
+nothing is left in ``sys.modules``.
 """
 
 from __future__ import annotations
 
 import importlib.machinery
 import importlib.util
+import os
 import sys
 import types
 
+import pytest
+
 REFERENCE_DIR = "/root/reference"
+_REFERENCE_UTILS = os.path.join(REFERENCE_DIR, "utils.py")
+
+requires_reference = pytest.mark.skipif(
+    not os.path.isfile(_REFERENCE_UTILS),
+    reason=f"reference checkout not found ({_REFERENCE_UTILS})",
+)
 
 
 def _stub_module(name: str, **attrs) -> types.ModuleType:
@@ -47,6 +60,8 @@ class _Any:
 def load_reference_utils():
     if "ref_utils" in sys.modules:
         return sys.modules["ref_utils"]
+    if not os.path.isfile(_REFERENCE_UTILS):
+        return None
     any_ = _Any()
     torch = _stub_module("torch", manual_seed=any_, cuda=any_)
     torch.__path__ = []  # mark as package so submodule imports resolve
@@ -64,10 +79,13 @@ def load_reference_utils():
     tqdm_mod.auto = sys.modules["tqdm.auto"]
     tqdm_mod.contrib = sys.modules["tqdm.contrib"]
 
-    spec = importlib.util.spec_from_file_location(
-        "ref_utils", f"{REFERENCE_DIR}/utils.py"
-    )
+    spec = importlib.util.spec_from_file_location("ref_utils", _REFERENCE_UTILS)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["ref_utils"] = mod
-    spec.loader.exec_module(mod)
+    try:
+        spec.loader.exec_module(mod)
+    except BaseException:
+        # never leave a half-initialised module for the next importer
+        del sys.modules["ref_utils"]
+        raise
     return mod

@@ -89,7 +89,7 @@ def test_engine_matches_oracle_english(spark):
     assert s_spans == o_spans
 
 
-def test_engine_dedupe_inference_is_transparent(spark):
+def test_engine_inference_dedup_is_transparent(spark):
     """Dedup of identical (prompt, chunk) pairs must not change any
     result — duplicated docs in the corpus included. Compares row
     MULTISETS: the join-back must attach each record exactly once per
@@ -103,27 +103,19 @@ def test_engine_dedupe_inference_is_transparent(spark):
     )
     schema = {"竞赛名称": ["主办方"]}
     o = flat_spans(OracleUIE(schema).extract(texts))
-    # dedupe_inference=False is a deprecated no-op — the engine warns
-    # and dedups anyway; assert the warning instead of emitting it
-    # into the suite's output (round-5 verdict nit).
-    with pytest.warns(DeprecationWarning, match="dedupe_inference"):
-        eng_off = UIEEngine(spark, schema, UIEConfig(dedupe_inference=False))
-    out = eng_off.extract(docs)
-    collected = out.collect()
+    collected = UIEEngine(spark, schema).extract(docs).collect()
     rows = Counter(
         (r["doc_id"], r["node_path"], r["text"], r["start"], r["end"],
          r["parent_text"], r["parent_start"])
         for r in collected
     )
     assert max(rows.values()) == 1, "duplicate result rows emitted"
-    off = {
+    got = {
         (r["doc_id"], r["node_path"], r["text"], r["start"], r["end"],
          round(r["prob"], 6))
         for r in collected
     }
-    assert off == o
-    on = _spark_sets(UIEEngine(spark, schema, UIEConfig(dedupe_inference=True)).extract(docs))[0]
-    assert on == o
+    assert got == o
 
 
 def test_engine_long_docs_chunk_merge(spark):

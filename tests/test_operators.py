@@ -1,5 +1,5 @@
-"""Operator-level tests: annotations pipeline, multimodal plumbing,
-metrics, dedup behaviors not covered by the oracle harness."""
+"""Operator-level tests: annotations pipeline, metrics, dedup
+behaviors not covered by the oracle harness."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from uie_pytorch_spark.operators import dedup as D
 from uie_pytorch_spark.operators import metrics as M
-from uie_pytorch_spark.operators import multimodal as MM
 from uie_pytorch_spark.sources import annotations as A
 
 DOCCANO_ROWS = [
@@ -138,45 +137,6 @@ def test_span_prf(spark):
     assert r["f1"] == pytest.approx(2 * (1 / 3) * 0.5 / (1 / 3 + 0.5))
 
 
-def test_multimodal_feature_plumbing(spark):
-    rows = [
-        (1, "image", bytes(range(200)), (10, 10, None, "image/png")),
-        (2, "video", b"\x05" * 64, (None, None, 3500, "video/mp4")),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    feats = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert feats[1]["n_bytes"] == 200
-    assert len(feats[1]["feature"]) == 16
-    # deterministic stub
-    feats2 = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert feats[1]["feature"] == feats2[1]["feature"]
-    # frame sampling plan from metadata only (no decode)
-    plan = MM.frame_sample_plan(media, every_ms=1000).collect()
-    assert sorted(r["frame_ts"] for r in plan) == [0, 1000, 2000, 3000]
-
-
-def test_multimodal_resize_plumbing(spark):
-    """resize_images: image rows get payloads of exactly width*height
-    bytes and updated meta; non-image rows pass through byte-identical;
-    the output schema composes with extract_features."""
-    rows = [
-        (1, "image", bytes(range(200)), (100, 50, None, "image/png")),
-        (2, "video", b"\x05" * 64, (None, None, 3500, "video/mp4")),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in MM.resize_images(media, 8, 4).collect()}
-    assert len(out[1]["payload"]) == 8 * 4
-    assert (out[1]["meta"]["width"], out[1]["meta"]["height"]) == (8, 4)
-    assert out[1]["meta"]["mime"] == "image/png"  # untouched meta field
-    assert bytes(out[2]["payload"]) == b"\x05" * 64  # passthrough
-    assert out[2]["meta"]["duration_ms"] == 3500
-    # deterministic, and composes with the feature extractor
-    again = {r["media_id"]: r for r in MM.resize_images(media, 8, 4).collect()}
-    assert bytes(again[1]["payload"]) == bytes(out[1]["payload"])
-    feats = MM.extract_features(MM.resize_images(media, 8, 4)).collect()
-    assert {r["media_id"] for r in feats} == {1, 2}
-
-
 def test_exact_dedup_finds_duplicates(spark):
     docs = spark.createDataFrame(
         [(1, "same text"), (2, "same text"), (3, "other")],
@@ -295,17 +255,32 @@ def test_engine_ops_metrics_accumulators(spark):
     assert m["decoded_spans"] * 8 >= n_spans  # spans fan back out via join
 
 
-def test_dedupe_inference_false_warns(spark):
-    """The flag is a documented no-op (dedup is unconditional); callers
-    passing False must get a runtime signal."""
-    import warnings
+def test_engine_unpersist_releases_every_extract(spark):
+    """The engine owns the caches of EVERY extract() call: a second
+    call must not orphan the first call's persisted stages."""
+    from uie_pytorch_spark.engine import UIEEngine
 
-    from uie_pytorch_spark.engine import UIEConfig, UIEEngine
+    # RDD ids, not a count: the JVM holds persisted RDDs weakly, so
+    # ones leaked by earlier tests can vanish mid-test
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        UIEEngine(spark, ["标签"], UIEConfig(dedupe_inference=False))
-    assert any(issubclass(x.category, DeprecationWarning) for x in w)
+    def docs(text):
+        return spark.createDataFrame(
+            [(i, text) for i in range(3)], "doc_id: long, text: string"
+        )
+
+    before = persisted()
+    eng = UIEEngine(spark, {"竞赛名称": ["主办方"]})
+    # different inputs, so the two calls' cached plans are distinct
+    first = eng.extract(docs("2022语言与智能技术竞赛由中国中文信息学会主办。"))
+    second = eng.extract(docs("全国大学生数学建模竞赛由中国工业与应用数学学会主办。"))
+    first.count()
+    second.count()
+    ours = persisted() - before
+    assert ours
+    eng.unpersist()
+    assert not persisted() & ours
 
 
 def test_jaccard_candidates_pushdown_matches_allpairs(spark):
@@ -526,80 +501,6 @@ def test_lsh_bucket_cap_observation_reports_drops(spark):
     # the 10-doc family fills one oversized bucket in each of 4 bands
     assert got["dropped_buckets"] == 4
     assert got["dropped_member_rows"] == 40
-
-
-# ---------------------------------------------------------------------
-# real-media kernel path ("pil") executed against a fake PIL — same
-# pattern as test_backends' fake torch/onnxruntime: the import-guarded
-# branch runs for real, only the third-party library is simulated.
-# scripts/media_smoke.py is the companion run where real Pillow exists.
-# ---------------------------------------------------------------------
-
-def _fake_pil():
-    import types
-
-    import numpy as np
-
-    class Img:
-        def __init__(self, data):
-            self.data = data  # (h, w) uint8
-
-        def convert(self, mode):
-            assert mode == "L"
-            return self
-
-        def resize(self, wh):
-            w, h = wh
-            return Img(np.resize(self.data, (h, w)))
-
-        def tobytes(self):
-            return self.data.tobytes()
-
-        def __array__(self, dtype=None, copy=None):
-            return self.data.astype(dtype or np.uint8)
-
-    class Image:
-        @staticmethod
-        def open(buf):
-            b = np.frombuffer(buf.getvalue(), dtype=np.uint8)
-            if b.size == 0:
-                raise OSError("cannot identify image file")
-            return Img(np.resize(b, (4, max(b.size // 4, 1))))
-
-    pil = types.ModuleType("PIL")
-    pil.Image = Image
-    return pil
-
-
-def test_pil_kernels_execute_against_fake(monkeypatch):
-    """The 'pil' decode/resize kernels run end-to-end against a fake
-    PIL: feature shape/range and the resize size invariant (payload
-    size is a pure function of the target shape) hold exactly as for
-    the stub — proving the swap is drop-in at the kernel contract."""
-    import sys
-
-    import numpy as np
-
-    monkeypatch.setitem(sys.modules, "PIL", _fake_pil())
-    payload = bytes(range(256)) * 3
-
-    feat = MM._pil_decode(payload, 16)
-    assert feat.shape == (16,) and feat.dtype == np.float32
-    assert float(feat.min()) >= 0.0 and float(feat.max()) <= 1.0
-
-    out = MM._pil_resize(payload, 8, 4)
-    assert isinstance(out, bytes) and len(out) == 8 * 4
-    # same invariants as the stub kernel on the same input
-    sfeat = MM._decode_image_stub(payload, 16)
-    assert sfeat.shape == feat.shape and sfeat.dtype == feat.dtype
-    assert len(MM._resize_image_stub(payload, 8, 4)) == len(out)
-
-
-def test_resolve_kernels_unknown_name():
-    with pytest.raises(ValueError, match="unknown media kernel"):
-        MM._resolve_kernels("torchvision")
-    decode, resize = MM._resolve_kernels("pil")
-    assert decode is MM._pil_decode and resize is MM._pil_resize
 
 
 def test_canonical_url_mirror_equivalence(spark):

@@ -8,7 +8,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from refimport import load_reference_utils
+from refimport import load_reference_utils, requires_reference
 from uie_pytorch_spark.core import spans as S
 
 ref = load_reference_utils()
@@ -16,6 +16,7 @@ ref = load_reference_utils()
 
 # ---------- threshold (utils.py:125-151) ----------
 
+@requires_reference
 @given(
     st.lists(st.floats(0.0, 1.0, allow_nan=False), max_size=64),
     st.floats(0.0, 1.0),
@@ -41,6 +42,7 @@ def _pair_via_reference(start_ids, start_ps, end_ids, end_ps):
     )
 
 
+@requires_reference
 @given(
     st.lists(st.integers(0, 40), max_size=20, unique=True),
     st.lists(st.integers(0, 40), max_size=20, unique=True),
@@ -90,6 +92,7 @@ def _om(prompt_len, text_len, pad=0):
     return rows
 
 
+@requires_reference
 @given(st.integers(1, 8), st.integers(1, 12), st.integers(0, 3))
 def test_get_id_and_prob_matches_reference(plen, tlen, pad):
     om = _om(plen, tlen, pad)

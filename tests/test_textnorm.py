@@ -7,7 +7,7 @@ import math
 from hypothesis import given
 from hypothesis import strategies as st
 
-from refimport import load_reference_utils
+from refimport import load_reference_utils, requires_reference
 from uie_pytorch_spark.core import textnorm as T
 
 ref = load_reference_utils()
@@ -18,6 +18,7 @@ _text_st = st.text(
 )
 
 
+@requires_reference
 @given(_text_st)
 def test_dbc2sbc_matches_reference(s):
     assert T.dbc2sbc(s) == ref.dbc2sbc(s)
@@ -29,6 +30,7 @@ def test_dbc2sbc_ideographic_space_quirk():
     assert T.dbc2sbc("ＡＢ！１") == "AB!1"
 
 
+@requires_reference
 @given(_text_st)
 def test_cut_chinese_sent_matches_reference(s):
     assert T.cut_chinese_sent(s) == ref.cut_chinese_sent(s)

@@ -8,7 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from refimport import load_reference_utils
+from refimport import load_reference_utils, requires_reference
 from uie_pytorch_spark.operators import training as TR
 from uie_pytorch_spark.sources import annotations as A
 
@@ -26,6 +26,7 @@ def _ref_reader_rows(rows, max_seq_len, tmp_path):
     return list(ref.reader(str(p), max_seq_len=max_seq_len))
 
 
+@requires_reference
 @pytest.mark.parametrize("max_seq_len", [32, 48])
 def test_rechunk_matches_reference_reader(spark, tmp_path, max_seq_len):
     content = "abcdefghij" * 8  # 80 chars
@@ -404,6 +405,7 @@ def test_relation_train_negatives_no_positives_takes_all(spark, tmp_path):
     assert negs == []
 
 
+@requires_reference
 def test_rechunk_long_cls_example_matches_reference(spark, tmp_path):
     """ADVICE r1: prompt-anchored cls answers (negative offsets) must
     be copied into EVERY window un-shifted when content exceeds the

@@ -87,8 +87,8 @@ def _make_infer_udf(
     seed: int,
     max_seq_len: int,
     position_prob: float,
-    acc_rows=None,
-    acc_spans=None,
+    acc_rows,
+    acc_spans,
     model_path: Optional[str] = None,
     backend: str = "numpy",
     tokenizer: str = "char",
@@ -100,9 +100,9 @@ def _make_infer_udf(
     side). The model is a per-worker lazy singleton (reference loads
     weights once per process, uie_predictor.py:153-158).
 
-    ``acc_rows``/``acc_spans`` are optional Spark accumulators counting
-    model inputs and emitted spans — free ops metrics (approximate
-    under task retries)."""
+    ``acc_rows``/``acc_spans`` are Spark accumulators counting model
+    inputs and emitted spans — free ops metrics (approximate under
+    task retries)."""
 
     def infer(batches):
         # late imports: run inside the executor Python worker
@@ -115,8 +115,7 @@ def _make_infer_udf(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            if acc_rows is not None:
-                acc_rows.add(rb.num_rows)
+            acc_rows.add(rb.num_rows)
             records = infer_decode_batch(
                 model,
                 rb.column("prompt").to_pylist(),
@@ -142,8 +141,7 @@ def _make_infer_udf(
                     ends.append(r["end"])
                     probs.append(r["prob"])
                     clss.append(r["is_cls"])
-            if acc_spans is not None:
-                acc_spans.add(len(keys))
+            acc_spans.add(len(keys))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(keys, pa.int64()),
@@ -171,13 +169,6 @@ class UIEConfig:
     position_prob: float = 0.5
     lang: str = "zh"
     split_sentence: bool = False
-    # DEPRECATED no-op, kept for API compat: identical (prompt, chunk)
-    # rows are ALWAYS deduplicated before inference — with duplicates
-    # present, the key join-back would multiply span records per owner
-    # row (each duplicate's records attach to every duplicate).
-    dedupe_inference: bool = True
-    # partitions for the inference stage; None -> leave to AQE
-    infer_partitions: Optional[int] = None
     # model artifact seam: path to a saved .npz (core.model.save_weights)
     # shipped to executors via sc.addFile / --files / spark.archives;
     # None -> regenerate TinyUIE from `seed` in-process.
@@ -214,17 +205,6 @@ class UIEEngine:
     def __init__(self, spark: SparkSession, schema, config: UIEConfig | None = None):
         self.spark = spark
         self.config = config or UIEConfig()
-        if not self.config.dedupe_inference:
-            import warnings
-
-            warnings.warn(
-                "UIEConfig.dedupe_inference=False is ignored: identical "
-                "(prompt, chunk) rows are ALWAYS deduplicated before "
-                "inference (duplicates would multiply span records "
-                "through the key join-back).",
-                DeprecationWarning,
-                stacklevel=2,
-            )
         self.tree = build_tree(schema)
         # ops metrics (north rule: lineage + METRICS): accumulators
         # tick as inference tasks run — zero-cost observability of the
@@ -273,9 +253,7 @@ class UIEEngine:
         docs = docs.select(
             F.col("doc_id").cast("long").alias("doc_id"), "text"
         )
-        self._stage_caches: List[DataFrame] = []
         all_results: List[DataFrame] = []
-        cached: List[DataFrame] = []
         # frontier: node -> result DF of that node's stage
         queue: List[tuple] = [(c, None) for c in self.tree.children]
         while queue:
@@ -288,7 +266,6 @@ class UIEEngine:
             results = self._run_stage(node, examples)
             if node.children:
                 results = results.persist()
-                cached.append(results)
                 self._stage_caches.append(results)
             all_results.append(results)
             for child in node.children:
@@ -299,8 +276,9 @@ class UIEEngine:
         return out
 
     def unpersist(self) -> None:
-        """Release stage caches after the extraction output has been
-        consumed (written / collected)."""
+        """Release the stage caches of every extract() call on this
+        engine, after their output has been consumed (written /
+        collected)."""
         for df in self._stage_caches:
             df.unpersist()
         self._stage_caches = []
@@ -408,7 +386,8 @@ class UIEEngine:
         * Child stage: max(prompt) depends only on parent span texts,
           so it is computed from the (persisted) parent results as a
           1-row agg cross-joined back as a broadcast — a scalar
-          subquery. The whole extraction stays one lazy DAG; round 1's
+          subquery, so mpl adds no job of its own (a stage's one
+          eager job is the cls probe in _run_stage); round 1's
           per-stage collect() + examples-subtree recompute (2 extra
           passes incl. a docs re-join per stage) is gone.
         """
@@ -540,10 +519,9 @@ class UIEEngine:
         # (measured 9.2 s -> 7.4 s on the sf0.1 flagship at 32 cores;
         # stragglers from slow NODES are speculative execution's job,
         # not the partition count's).
-        n_parts = self.config.infer_partitions or (
-            self.spark.sparkContext.defaultParallelism
+        infer_in = infer_in.repartition(
+            self.spark.sparkContext.defaultParallelism, "key"
         )
-        infer_in = infer_in.repartition(n_parts, "key")
         records = infer_in.mapInArrow(self._infer_udf, schema=_INFER_SCHEMA)
         # both the span branch and the cls-vote branch scan `records`;
         # without a persist the model would run TWICE per stage
