@@ -144,41 +144,27 @@ def main():
          plan_of(QUERIES["ann_ivf_l2_topk"](spark, SF)))
     )
 
-    # 7. jaccard with candidates: pair list joined below the agg
+    # 7. near-dup verified edges: minhash -> LSH band join -> jaccard
+    # on the candidates' shingle arrays (CC inputs only — the CC loop
+    # itself is iterative with localCheckpoint lineage cuts, so the
+    # auditable plan is the edge-construction pipeline)
     from pyspark.sql import functions as F
 
     from uie_pytorch_spark.operators import dedup as D
 
     docs_j = docs_full.select("doc_id", "text").limit(200)
-    sig = D.minhash_sig_array(docs_j)
-    cands = D.lsh_candidate_pairs(sig)
+    cands = D.lsh_candidate_pairs(D.minhash_sig_array(docs_j))
     sections.append(
-        ("jaccard_pairs with LSH candidates (pushdown)",
-         "Expect the candidate pair table and the LeftSemi prune of "
-         "shingles BELOW the intersection aggregate — the all-pairs "
-         "shingle self-join must NOT appear (no a.doc_id < b.doc_id "
-         "range join over co-shingled rows).",
+        ("jaccard_pairs with LSH candidates (shingle arrays)",
+         "Expect: partial-aggregated minhash groupBys, one banded "
+         "equi-join for candidates, then the candidate pair table "
+         "joined twice to per-doc shingle arrays (one join per side) "
+         "and scored by array_intersect — no aggregate above the "
+         "candidate list and no all-pairs shingle self-join.",
          plan_of(D.jaccard_pairs(docs_j, threshold=0.5, candidates=cands)))
     )
 
-    # 8. end-to-end near-dup canonicalization (CC inputs only — the CC
-    # loop itself is iterative with localCheckpoint lineage cuts, so
-    # the auditable plan is the edge-construction pipeline)
-    sections.append(
-        ("near-dup verified edges (minhash -> LSH band join -> candidate-pushdown jaccard)",
-         "Expect: partial-aggregated minhash groupBys, one banded "
-         "equi-join for candidates, and the jaccard intersection "
-         "computed by joining the candidate pair list to semi-join-"
-         "pruned shingles — no all-pairs self-join.",
-         plan_of(
-             D.jaccard_pairs(
-                 docs_j, threshold=0.5,
-                 candidates=D.lsh_candidate_pairs(D.minhash_sig_array(docs_j)),
-             )
-         ))
-    )
-
-    # 9. exact pre-collapse below the near-dup tier: the mirror-cluster
+    # 8. exact pre-collapse below the near-dup tier: the mirror-cluster
     # hazard fix. The content-hash HashAggregate must sit BELOW the
     # shingle explode (Generate) in the candidate branch, so identical
     # documents are collapsed BEFORE any signature/banding work.
@@ -196,7 +182,7 @@ def main():
          plan_of(_near_dup_edges(D, F, docs_j)))
     )
 
-    # 10. range join: the bucketed rewrite must be an equi-join, not
+    # 9. range join: the bucketed rewrite must be an equi-join, not
     # the BroadcastNestedLoopJoin Spark plans for a raw inequality join
     from uie_pytorch_spark.operators.temporal import range_join_bucketed
 
@@ -225,7 +211,7 @@ def main():
          )))
     )
 
-    # 11. salted hot-key aggregation: two HashAggregate pairs (salted
+    # 10. salted hot-key aggregation: two HashAggregate pairs (salted
     # partial -> merge) and the corpus total as a broadcast scalar
     from uie_pytorch_spark.operators import textstats as TS
 
@@ -241,7 +227,7 @@ def main():
          plan_of(TS.salted_group_stats(docs_full)))
     )
 
-    # 12. incremental KG delta-merge: union + ONE combinable groupBy,
+    # 11. incremental KG delta-merge: union + ONE combinable groupBy,
     # never a full-outer join of base against delta
     sections.append(
         ("kg_merge_delta (standing edge table + delta batch fold)",
@@ -253,7 +239,7 @@ def main():
          plan_of(QUERIES["kg_merge_delta"](spark, SF)))
     )
 
-    # 13. entity linking: explode + equi-join candidates, single
+    # 12. entity linking: explode + equi-join candidates, single
     # window shuffle — never a LIKE/contains theta-join
     sections.append(
         ("kg_link_mentions (token equi-join candidates + salience argmax)",
@@ -266,7 +252,7 @@ def main():
          plan_of(QUERIES["kg_link_mentions"](spark, SF)))
     )
 
-    # 14. co-occurrence PMI: doc-key self equi-join, combinable pair
+    # 13. co-occurrence PMI: doc-key self equi-join, combinable pair
     # groupBy, marginals broadcast back
     sections.append(
         ("kg_cooccurrence_pmi (incidence self-join -> pair groupBy -> broadcast marginals)",
@@ -279,7 +265,7 @@ def main():
          plan_of(QUERIES["kg_cooccurrence_pmi"](spark, SF)))
     )
 
-    # 15. BM25: query-term filter pushed below the tf agg, corpus
+    # 14. BM25: query-term filter pushed below the tf agg, corpus
     # scalars as 1-row broadcasts, global top-k WITHOUT a global window
     sections.append(
         ("bm25_topk (postings-proportional scoring -> TakeOrderedAndProject top-k)",
@@ -294,7 +280,7 @@ def main():
          plan_of(QUERIES["bm25_topk"](spark, SF)))
     )
 
-    # 16. LPA communities: per-round keyed join + combinable count +
+    # 15. LPA communities: per-round keyed join + combinable count +
     # per-node window, label vector stays narrow
     sections.append(
         ("kg_community_labels (2-round label propagation)",
@@ -307,7 +293,7 @@ def main():
          plan_of(QUERIES["kg_community_labels"](spark, SF)))
     )
 
-    # 17. snapshot diff: tag+union+one combinable groupBy, never a
+    # 16. snapshot diff: tag+union+one combinable groupBy, never a
     # full-outer join
     sections.append(
         ("kg_snapshot_diff (CDC between two snapshots as union + ONE groupBy)",
@@ -319,7 +305,7 @@ def main():
          plan_of(QUERIES["kg_snapshot_diff"](spark, SF)))
     )
 
-    # 18. node similarity: wedge equi-join pair generation, no
+    # 17. node similarity: wedge equi-join pair generation, no
     # cartesian, degrees joined back keyed
     sections.append(
         ("kg_node_similarity (shared-neighbor wedge join -> combinable pair count)",
@@ -332,7 +318,7 @@ def main():
          plan_of(QUERIES["kg_node_similarity"](spark, SF)))
     )
 
-    # 19. entity profile: three narrow per-entity vectors composed by
+    # 18. entity profile: three narrow per-entity vectors composed by
     # keyed equi-joins — never a wide shuffle of the edge table
     sections.append(
         ("kg_entity_profile (rank + community + degree vertices table)",
@@ -347,7 +333,7 @@ def main():
          plan_of(QUERIES["kg_entity_profile"](spark, SF)))
     )
 
-    # 20. SCD2 fact intervals: all passes co-partitioned on the fact
+    # 19. SCD2 fact intervals: all passes co-partitioned on the fact
     # key — expect ONE exchange for the whole chain
     sections.append(
         ("kg_fact_intervals (SCD2 validity intervals from an observation log)",
@@ -359,7 +345,7 @@ def main():
          plan_of(QUERIES["kg_fact_intervals"](spark, SF)))
     )
 
-    # 21. HITS: deferred normalization keeps the gather chain linear
+    # 20. HITS: deferred normalization keeps the gather chain linear
     sections.append(
         ("kg_hits (deferred-normalization hubs/authorities)",
          "Expect a LINEAR chain of per-round gathers — one equi-join "
@@ -372,7 +358,7 @@ def main():
          plan_of(QUERIES["kg_hits"](spark, SF)))
     )
 
-    # 22. corpus mix sampling: pure projection + broadcast rate dim —
+    # 21. corpus mix sampling: pure projection + broadcast rate dim —
     # the corpus is never shuffled
     sections.append(
         ("corpus_mix_sample (stratified hash-rate downsampling)",
@@ -383,7 +369,7 @@ def main():
          plan_of(QUERIES["corpus_mix_sample"](spark, SF)))
     )
 
-    # 23. bounded-hop weighted shortest paths: frontier joins only,
+    # 22. bounded-hop weighted shortest paths: frontier joins only,
     # per-round min collapse, one final combinable min
     sections.append(
         ("kg_shortest_paths (bounded min-plus relaxation from seeds)",
@@ -396,7 +382,7 @@ def main():
          plan_of(QUERIES["kg_shortest_paths"](spark, SF)))
     )
 
-    # 24. decontamination: broadcast eval n-grams, corpus never
+    # 23. decontamination: broadcast eval n-grams, corpus never
     # shuffled on n-gram text
     sections.append(
         ("benchmark_decontaminate (n-gram overlap vs eval set)",
@@ -411,7 +397,7 @@ def main():
          plan_of(QUERIES["benchmark_decontaminate"](spark, SF)))
     )
 
-    # 25. point-in-time belief: the interval chain + ONE filter
+    # 24. point-in-time belief: the interval chain + ONE filter
     sections.append(
         ("kg_belief_asof (point-in-time query over SCD2 intervals)",
          "Expect exactly the kg_fact_intervals plan (single exchange "
@@ -421,7 +407,7 @@ def main():
          plan_of(QUERIES["kg_belief_asof"](spark, SF)))
     )
 
-    # 26. reciprocity: one keyed left-semi self-join, no cartesian
+    # 25. reciprocity: one keyed left-semi self-join, no cartesian
     sections.append(
         ("kg_reciprocity_report (per-predicate symmetric-edge QC)",
          "Expect the distinct edge set built once, ONE left-semi "

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 
 from uie_pytorch_spark.core.model import TinyUIE, forward_bucketed, get_model
@@ -113,12 +115,14 @@ def test_tokenizer_truncates_long_text():
     assert enc["input_ids"].shape[0] == 64
 
 
-def test_blas_env_vars_deterministic_and_injected(spark):
+def test_blas_env_vars_deterministic_and_injected(spark, monkeypatch):
     """The kernel-env contract (round 6): blas_env_vars() is stable
     within a host (same coretype every call), single-threaded, and
     UIEEngine construction injects it into sc.environment so Python
     workers of ANY session (even one built by an external harness)
-    load the same OpenBLAS kernels as the eager oracle process."""
+    load the same OpenBLAS kernels as the eager oracle process. The
+    kernel family is the driver's CPU, so a non-local master gets the
+    thread pins only."""
     from uie_pytorch_spark.core import blas_env_vars, preferred_blas_coretype
     from uie_pytorch_spark.engine import UIEEngine
 
@@ -127,9 +131,18 @@ def test_blas_env_vars_deterministic_and_injected(spark):
     assert env1["OPENBLAS_NUM_THREADS"] == "1"
     ct = preferred_blas_coretype()
     if ct is not None:
-        assert env1["OPENBLAS_CORETYPE"] in ("SKYLAKEX", "HASWELL")
+        assert env1["OPENBLAS_CORETYPE"] == (os.environ.get("OPENBLAS_CORETYPE") or ct)
 
-    UIEEngine(spark, {"subject entity": ["related fact"]})
-    sc_env = spark.sparkContext.environment
+    sc = spark.sparkContext
+    schema = {"subject entity": ["related fact"]}
+    UIEEngine(spark, schema)
     for k, v in env1.items():
-        assert sc_env.get(k) == v
+        assert sc.environment.get(k) == v
+
+    monkeypatch.setattr(sc, "environment", {})
+    monkeypatch.setattr(sc, "master", "spark://cluster:7077")
+    UIEEngine(spark, schema)
+    assert "OPENBLAS_CORETYPE" not in sc.environment
+    for k, v in env1.items():
+        if k != "OPENBLAS_CORETYPE":
+            assert sc.environment.get(k) == v

@@ -288,7 +288,8 @@ def test_jaccard_candidates_pushdown_matches_allpairs(spark):
     shingle sets, no all-pairs blow-up) must agree exactly with the
     all-pairs branch restricted to those candidates — including inter /
     size columns, and candidate pairs with zero shared shingles must
-    vanish in both."""
+    vanish in both. So must a pair of NULL texts, a pair with an empty
+    text, and a pair naming a doc that is not in ``docs``."""
     docs = spark.createDataFrame(
         [
             (1, "abcdefghij"),
@@ -296,24 +297,26 @@ def test_jaccard_candidates_pushdown_matches_allpairs(spark):
             (3, "abcdefghij-tail"),
             (4, "zzzzzzzzzz"),
             (5, "qqqqq"),
+            (6, None),
+            (7, None),
+            (8, ""),
         ],
         "doc_id: long, text: string",
     )
-    cands = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (1, 4), (4, 5)], "doc_a: long, doc_b: long"
-    )
+    pairs = [(1, 2), (1, 3), (2, 3), (1, 4), (4, 5), (6, 7), (5, 8), (1, 99)]
+    cands = spark.createDataFrame(pairs, "doc_a: long, doc_b: long")
     allp = {
         (r["doc_a"], r["doc_b"], r["inter"], r["sz_a"], r["sz_b"])
         for r in D.jaccard_pairs(docs, threshold=0.0).collect()
     }
-    cand_keys = {(a, b) for a, b in [(1, 2), (1, 3), (2, 3), (1, 4), (4, 5)]}
-    expected = {t for t in allp if (t[0], t[1]) in cand_keys}
+    expected = {t for t in allp if (t[0], t[1]) in set(pairs)}
     got = {
         (r["doc_a"], r["doc_b"], r["inter"], r["sz_a"], r["sz_b"])
         for r in D.jaccard_pairs(docs, threshold=0.0, candidates=cands).collect()
     }
     assert got == expected
-    assert (4, 5) not in {(a, b) for (a, b, *_s) in got}  # no shared shingle
+    # no shared shingle, NULL texts, empty text, missing doc
+    assert not {(a, b) for (a, b, *_s) in got} & {(4, 5), (6, 7), (5, 8), (1, 99)}
 
 
 def test_xxh64_matches_spark(spark):

@@ -4,9 +4,12 @@ clean run and that done partitions are skipped."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
+from uie_pytorch_spark import cli
 from uie_pytorch_spark.engine import UIEConfig, UIEEngine
 from uie_pytorch_spark.kg.lineage import CheckpointedRun, salted_partition_key
 from uie_pytorch_spark.sources.web_pages import fixture_web_pages
@@ -68,3 +71,42 @@ def test_resume_produces_identical_output(spark, tmp_path):
     )
     assert sorted(r["part_key"] for r in per_part) == [0, 1, 2, 3]
     assert all(r["count"] == 1 for r in per_part)
+
+
+def test_cli_backfill_holds_one_buckets_caches(spark, tmp_path, monkeypatch):
+    """cli.main owns its engine's persisted stages: each bucket's
+    caches are released once the bucket is committed, so a backfill
+    holds one bucket's caches at a time, not every bucket's."""
+    # RDD ids, not a count: the JVM holds persisted RDDs weakly, so
+    # ones leaked by earlier tests can vanish mid-test
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    starts, commits = [], []
+    extract, append = UIEEngine.extract, CheckpointedRun._append_lineage
+
+    def recording_extract(self, docs):
+        starts.append(persisted())
+        return extract(self, docs)
+
+    def recording_append(self, *args, **kwargs):
+        commits.append(persisted())
+        return append(self, *args, **kwargs)
+
+    monkeypatch.setattr(UIEEngine, "extract", recording_extract)
+    monkeypatch.setattr(CheckpointedRun, "_append_lineage", recording_append)
+    src = str(tmp_path / "pages")
+    fixture_web_pages(spark, n_docs=24, seed=9).write.parquet(src)
+    cli.main([
+        "--input", src, "--output", str(tmp_path / "out"),
+        "--schema", json.dumps({"竞赛名称": ["主办方"]}, ensure_ascii=False),
+        "--buckets", "4", "--run-id", "r1",
+    ])
+
+    assert len(starts) == len(commits) == 4
+    buckets = [commit - start for start, commit in zip(starts, commits)]
+    assert any(buckets)
+    for commit, bucket in zip(commits, buckets):
+        # nothing an earlier bucket cached is still held at this commit
+        assert commit - starts[0] <= bucket
+    assert not persisted() & set().union(*buckets)

@@ -103,15 +103,21 @@ def main(argv=None):
         tokenizer=args.tokenizer,
     )
 
+    eng = UIEEngine(spark, schema, config)
+
     def extract_fn(part_pages):
+        # the previous bucket is committed by now: release its caches
+        eng.unpersist()
         docs = part_pages.select(F.xxhash64("url").alias("doc_id"), "text")
-        eng = UIEEngine(spark, schema, config)
         return UIEEngine.triples(eng.extract(docs))
 
     run = CheckpointedRun(
         spark, args.output, run_id=args.run_id, buckets=args.buckets
     )
-    triples = run.run(pages, extract_fn)
+    try:
+        triples = run.run(pages, extract_fn)
+    finally:
+        eng.unpersist()
 
     mentions = (
         triples.select(F.col("subj_text").alias("surface"))

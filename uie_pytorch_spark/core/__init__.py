@@ -43,9 +43,9 @@ def preferred_blas_coretype() -> str | None:
 def blas_env_vars() -> dict:
     """Env vars every kernel-running process must agree on (driver
     eager oracle, freeze scripts, Spark Python workers): single BLAS
-    thread + a deterministic OpenBLAS kernel family. Propagate these
-    into ``sc.environment`` so workers of ANY SparkSession (including
-    one built by an external harness) load the same kernels."""
+    thread + a deterministic OpenBLAS kernel family. UIEEngine copies
+    these into ``sc.environment`` so workers of ANY SparkSession load
+    the same kernels (the kernel family on a local master only)."""
     env = {
         "OMP_NUM_THREADS": "1",
         "OPENBLAS_NUM_THREADS": "1",

@@ -219,11 +219,14 @@ class UIEEngine:
         # those envVars — so mutating it here, BEFORE extract() builds
         # the inference UDF, guarantees fresh workers see the vars
         # before their first numpy import. setdefault semantics: an
-        # explicitly configured environment wins.
+        # explicitly configured environment wins. The kernel family is
+        # the driver's CPU: pin it only on a local master (a remote
+        # executor without AVX-512 would SIGILL on a SKYLAKEX pin).
         from .core import blas_env_vars
 
         for _k, _v in blas_env_vars().items():
-            sc.environment.setdefault(_k, _v)
+            if _k != "OPENBLAS_CORETYPE" or sc.master.startswith("local"):
+                sc.environment.setdefault(_k, _v)
         self.acc_infer_rows = sc.accumulator(0)
         self.acc_spans_out = sc.accumulator(0)
         self._infer_udf = _make_infer_udf(

@@ -54,14 +54,18 @@ def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def shingle_set(t: F.Column, width: int = DEFAULT_SHINGLE) -> F.Column:
+    """Distinct char shingles of ``t`` as an array (native
+    sequence+transform, no Python). NULL text gives ``[NULL]``."""
+    idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (width - 1), F.lit(1)))
+    return F.array_distinct(F.transform(idx, lambda i: t.substr(i, F.lit(width))))
+
+
 def shingles(docs: DataFrame, text_col: str = "text", width: int = DEFAULT_SHINGLE) -> DataFrame:
-    """Distinct char shingles per doc via native sequence+transform
-    explode (no Python)."""
-    t = F.col(text_col)
-    n = F.length(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - (width - 1), F.lit(1)))
-    sh = F.array_distinct(F.transform(idx, lambda i: t.substr(i, F.lit(width))))
-    return docs.select("doc_id", F.explode(sh).alias("shingle"))
+    """Distinct char shingles per doc, one row each."""
+    return docs.select(
+        "doc_id", F.explode(shingle_set(F.col(text_col), width)).alias("shingle")
+    )
 
 
 def minhash_sig_array(
@@ -227,33 +231,29 @@ def jaccard_pairs(
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """n-gram (char-shingle) Jaccard similarity pairs >= threshold.
-    With ``candidates`` given, the intersection is computed by joining
-    the candidate PAIR LIST to the per-doc shingle sets (work is
-    O(|candidates| * shingles-per-doc) — the all-pairs co-shingle
-    blow-up never happens, and shingles of non-candidate docs are
-    semi-joined away before any wide join). Without ``candidates``:
-    all pairs sharing >=1 shingle (oracle/test path, O(n^2) by
-    design)."""
-    sh = shingles(docs, text_col, width)
+    With ``candidates`` given, each candidate PAIR is joined to its two
+    docs' shingle arrays and scored with ``array_intersect`` (work is
+    O(|candidates| * shingles-per-doc), no shingle rows, no aggregate).
+    Without ``candidates``: all pairs sharing >=1 shingle (oracle/test
+    path, O(n^2) by design). Either way a NULL text matches nothing."""
     if candidates is not None:
-        cand = candidates.select("doc_a", "doc_b")
-        cand_docs = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
+        # drop NULL texts: array_intersect([NULL], [NULL]) is [NULL]
+        sets = docs.filter(F.col(text_col).isNotNull()).select(
+            "doc_id", shingle_set(F.col(text_col), width)
         )
-        # prune shingles (and sizes) to candidate docs BEFORE any join
-        sh = sh.join(cand_docs, "doc_id", "left_semi")
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-        sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        inter = (
-            cand.join(sha, "doc_a")
-            .join(shb, ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
+        scored = (
+            candidates.select("doc_a", "doc_b")
+            .join(sets.toDF("doc_a", "sa"), "doc_a")
+            .join(sets.toDF("doc_b", "sb"), "doc_b")
+            .selectExpr(
+                "doc_a", "doc_b",
+                "CAST(size(array_intersect(sa, sb)) AS LONG) AS inter",
+                "CAST(size(sa) AS LONG) AS sz_a", "CAST(size(sb) AS LONG) AS sz_b",
+            )
+            .filter("inter > 0")  # as all-pairs: no shared shingle, no pair
         )
     else:
+        sh = shingles(docs, text_col, width)
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
         a = sh.alias("a")
         b = sh.alias("b")
@@ -262,17 +262,17 @@ def jaccard_pairs(
             .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
             .agg(F.count(F.lit(1)).alias("inter"))
         )
-    out = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn(
+        scored = inter.join(
+            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a"
+        ).join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
+    return (
+        scored.withColumn(
             "jaccard",
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
     )
-    return out
 
 
 def near_dup_canonical(
@@ -306,7 +306,7 @@ def near_dup_canonical(
     cluster because each rep is already its content group's min.
 
     Scale shape: every step is the audited scale path (one content-hash
-    groupBy, banded equi-join, candidate-pushdown Jaccard,
+    groupBy, banded equi-join, candidate-only Jaccard on shingle arrays,
     small/large-star CC with per-round lineage cuts); no all-pairs work
     anywhere. ``max_bucket_size`` additionally caps LSH band buckets
     (see lsh_candidate_pairs) as the backstop for near-identical — not
