@@ -8,6 +8,12 @@ would drift together). The frozen goldens pin the kernel itself:
 tests/test_goldens.py recomputes the oracle and compares. If a kernel
 change is INTENTIONAL (e.g. swapping in real UIE weights), rerun this
 script and commit the diff.
+
+Frozen outputs (these goldens and tests/frozen/*.parquet) assume the
+AVX-512 OpenBLAS kernel, OPENBLAS_CORETYPE=SKYLAKEX: other kernel
+families round GEMMs differently, so their tests skip wherever
+blas_env_vars() pins another family (``frozen_kernel`` in
+tests/conftest.py). Refreeze only under SKYLAKEX.
 """
 
 from __future__ import annotations

@@ -20,7 +20,8 @@ Provenance of each golden (NOT produced by the Spark engine):
     formatting layer imports uie_pytorch_spark.export.
 
 Rerun this script and commit the diff whenever the kernel or fixture
-corpus changes intentionally.
+corpus changes intentionally, under the SKYLAKEX kernel (see
+freeze_goldens.py).
 """
 
 from __future__ import annotations

@@ -19,6 +19,32 @@ for _v, _val in blas_env_vars().items():
 
 import pytest
 
+# tests/goldens.json and tests/frozen/*.parquet were frozen under the
+# AVX-512 OpenBLAS kernel; other kernel families round GEMMs differently
+# (+-1 ulp), so tests marked ``frozen_kernel`` skip under them.
+FROZEN_CORETYPE = "SKYLAKEX"
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        f"frozen_kernel: compares with outputs frozen under the "
+        f"{FROZEN_CORETYPE} OpenBLAS kernel",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    ct = blas_env_vars().get("OPENBLAS_CORETYPE")
+    if ct == FROZEN_CORETYPE:
+        return
+    skip = pytest.mark.skip(
+        reason=f"frozen outputs need OPENBLAS_CORETYPE={FROZEN_CORETYPE}, "
+        f"this host pins {ct}"
+    )
+    for item in items:
+        if "frozen_kernel" in item.keywords:
+            item.add_marker(skip)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -16,6 +16,8 @@ from uie_pytorch_spark.sources.web_pages import generate_fixture_rows
 
 GOLDENS = os.path.join(os.path.dirname(__file__), "goldens.json")
 
+pytestmark = pytest.mark.frozen_kernel
+
 SCHEMAS = {
     "entity": (["时间", "选手", "赛事名称"], "zh"),
     "relation": ({"竞赛名称": ["主办方", "承办方"]}, "zh"),

@@ -1,4 +1,4 @@
-"""KG-layer tests: canonicalization tiers + connected components."""
+"""KG-layer tests: canonicalization + connected components."""
 
 from __future__ import annotations
 
@@ -22,16 +22,6 @@ def test_normalize_surface(spark):
     assert got[1] == "acme corp"
     assert got[2] == "acme corp"
     assert got[3] == "acme corp"
-
-
-def test_exact_canonical_salted(spark):
-    rows = [(i, "Beijing") for i in range(50)] + [(100, "shanghai")]
-    df = spark.createDataFrame(rows, "mention_id: long, surface: string")
-    got = {
-        r["surface_norm"]: r["canonical_id"]
-        for r in C.exact_canonical(df).collect()
-    }
-    assert got == {"beijing": 0, "shanghai": 100}
 
 
 def test_connected_components_basic(spark):
@@ -59,13 +49,17 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_empty_selfloop_converged(spark):
-    """Focused coverage for the round-6 internals change (convergence
-    signature carried by an observe on the per-round checkpoint job):
+    """Focused coverage for the CC loop's edges (convergence signature
+    carried by an observe on the per-round checkpoint job):
     (a) empty input and (b) self-loops-only input exercise the
-    observed-count emptiness path that replaced the isEmpty probe;
-    (c) a star graph is a fixpoint of the small/large-star round map,
-    so ONE round must suffice (the seeded initial signature makes the
-    loop exit there) — asserted by forcing max_iterations=1."""
+    observed-count emptiness path;
+    (c) a star graph is a fixpoint of the round map (every member of a
+    node's closed neighbourhood links to its minimum), so ONE round
+    must suffice (the seeded initial signature makes the loop exit
+    there) — asserted by forcing max_iterations=1;
+    (d) a path cut off by max_iterations=1 before it converges still
+    labels every node, each with a node of its own component (node 2
+    only ever appears as the smaller end of its edges)."""
     empty = spark.createDataFrame([], "src: long, dst: long")
     assert C.connected_components(empty).count() == 0
     assert [f.name for f in C.connected_components(empty).schema] == [
@@ -84,13 +78,22 @@ def test_connected_components_empty_selfloop_converged(spark):
     }
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1}
 
+    path = spark.createDataFrame(
+        [(3, 1), (2, 4), (3, 4)], "src: long, dst: long"
+    )
+    rows = C.connected_components(path, max_iterations=1).collect()
+    comp = {r["id"]: r["component"] for r in rows}
+    assert len(rows) == 4 and set(comp) == {1, 2, 3, 4}
+    assert set(comp.values()) <= {1, 2, 3, 4}
+
 
 def test_connected_components_large_mixed_graph(spark):
     """Scale-shape evidence for the CC backbone: a 512-node path
     (worst case for label propagation — high diameter), a 500-leaf
     star (hub skew), cross-links merging them with a batch of random
     pairs, plus many singleton-ish 2-cliques. Must converge inside the
-    round budget (small/large-star is O(log n) rounds on a path) and
+    round budget (the combined small/large-star round is O(log n)
+    rounds on a path) and
     agree exactly with a union-find oracle."""
     import random
 

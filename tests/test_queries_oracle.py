@@ -53,6 +53,8 @@ import __spark_entry__ as entrymod  # noqa: E402
 _ORACLES = entrymod.oracle_sql()
 _QUERIES = entrymod.queries()
 _CHECKED = sorted(set(_QUERIES) & set(_ORACLES))
+# oracles that read tests/frozen/ (scripts/freeze_query_oracles.py)
+_FROZEN = {n for n in _CHECKED if "/tests/frozen/" in _ORACLES[n]}
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +64,10 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", _CHECKED)
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.frozen_kernel) if n in _FROZEN else n
+    for n in _CHECKED
+])
 def test_query_matches_duckdb_oracle(spark, duck, name):
     sdf = _QUERIES[name](spark, SF_DIR)
     s_cols = [c.lower() for c in sdf.columns]

@@ -1,21 +1,21 @@
 """Entity canonicalization (∅J6 in SURVEY §2.3): map surface forms of
 extracted entities to canonical ids.
 
-Three tiers, composable:
-  1. normalize: lower/trim/whitespace-collapse + full-width fold —
-     exact-match tier, one salted groupBy;
+Three steps (canonicalize_mentions):
+  1. normalize: lower/trim/whitespace-collapse + full-width fold, then
+     one ``distinct`` over the normalized surfaces;
   2. near-match: MinHash LSH over char shingles of the normalized
      surface (operators/dedup.py) -> candidate pairs with Jaccard
      verify;
   3. transitive closure: connected components over the verified-pair
-     graph via alternating small-star/large-star label propagation
-     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-     SOCC'14) — pyspark-only, no GraphFrames dependency, converges in
-     O(log n) rounds for web-ish graphs.
+     graph via small-star/large-star label propagation, one aggregate
+     per round (Kiveris et al., "Connected Components in MapReduce and
+     Beyond", SOCC'14) — pyspark-only, no GraphFrames dependency,
+     converges in O(log n) rounds for web-ish graphs.
 
 Skew: hot surface forms (boilerplate entities like "北京") concentrate
-on few keys; the exact tier pre-aggregates per (surface, salt) then
-re-aggregates, bounding any single reducer.
+on few keys; the ``distinct`` is map-side combined, so a hot surface
+reaches its reducer as one row per map task.
 """
 
 from __future__ import annotations
@@ -32,26 +32,6 @@ def normalize_surface(col):
     # U+3000 for reference parity; canonicalization wants it folded)
     c = F.translate(col, DBC_FROM + "　", DBC_TO + " ")
     return F.trim(F.regexp_replace(F.lower(c), r"(?U)\s+", " "))
-
-
-def exact_canonical(mentions: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """mentions(surface, mention_id) -> (surface_norm, canonical_id)
-    where canonical_id = min mention_id per normalized surface.
-    Two-phase salted aggregation: partial min per (surface, salt)
-    bucket, then final min — a hot surface never lands on one reducer
-    in phase one."""
-    m = mentions.select(
-        normalize_surface(F.col("surface")).alias("surface_norm"),
-        F.col("mention_id"),
-    ).withColumn(
-        "salt", F.pmod(F.xxhash64("mention_id"), F.lit(salt_buckets))
-    )
-    partial = m.groupBy("surface_norm", "salt").agg(
-        F.min("mention_id").alias("pmin")
-    )
-    return partial.groupBy("surface_norm").agg(
-        F.min("pmin").alias("canonical_id")
-    )
 
 
 def near_match_edges(
@@ -96,30 +76,44 @@ def _ckpt_with_signature(df: DataFrame):
     return out, (m["n"], m["s"], m["m"])
 
 
+def _normalize_ckpt(pairs: DataFrame):
+    """(u, v) pairs -> checkpointed undirected edge set with u > v:
+    self-loops dropped, each pair oriented by greatest/least, duplicates
+    removed, then _ckpt_with_signature. The initial step and every CC
+    round end here."""
+    return _ckpt_with_signature(
+        pairs.filter(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct()
+    )
+
+
 def connected_components(
     edges: DataFrame, max_iterations: int = 20
 ) -> DataFrame:
     """(src, dst) undirected edges -> (id, component) with component =
-    min node id in the component. Alternating large-star / small-star;
-    each round is two self-joins + groupBy min. Deterministic; loops
-    terminate when the edge multiset stops changing (checked via a
-    cheap aggregate signature collected BY the per-round checkpoint
-    job — see _ckpt_with_signature)."""
+    min node id in the component. Each round applies large-star and
+    small-star at once: every member of u's closed neighbourhood links
+    to m_u = min(N(u) ∪ {u}), computed as ONE groupBy over both edge
+    orientations (min + collect_list of the neighbours) and no join.
+    Deterministic; loops terminate when the edge set stops changing
+    (checked via a cheap aggregate signature collected BY the
+    per-round checkpoint job — see _ckpt_with_signature).
+
+    Skew: collect_list holds a node's whole neighbour list in one row,
+    so a hub's edges meet on one reducer (as any groupBy or join keyed
+    on the node would send them); not measured at web scale.
+
+    If ``max_iterations`` stops the loop early, every node with an edge
+    to another node still gets a row, labelled with a node of its own
+    component."""
     spark = edges.sparkSession
-    # undirected -> ordered pairs u > v (parent candidates)
-    e, prev_sig = _ckpt_with_signature(
+    # the checkpoint cuts the upstream DAG once — edge construction may
+    # sit on an expensive lineage (model inference); every CC round
+    # would otherwise recompute it. Its observed count also answers the
+    # emptiness probe.
+    e, prev_sig = _normalize_ckpt(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        # the checkpoint cuts the upstream DAG once — edge construction
-        # may sit on an expensive lineage (model inference); every CC
-        # round would otherwise recompute it. Its observed count also
-        # answers the emptiness probe (one job where round 5 paid a
-        # checkpoint AND an isEmpty).
     )
     if prev_sig[0] == 0:
         return spark.createDataFrame([], "id: long, component: long")
@@ -129,44 +123,31 @@ def connected_components(
     # round 1 instead of 2); the round map is a deterministic function
     # of e, so breaking on e_k == e_{k-1} yields the same final e.
     for _ in range(max_iterations):
-        # large-star: every neighbor w of u with w > u links to
-        # min(neighbors(u) ∪ {u})
-        nbrs = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("mn")).select(
-            "u", F.least(F.col("mn"), F.col("u")).alias("m")
+        star = (
+            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .groupBy("u")
+            .agg(F.min("v").alias("mn"), F.collect_list("v").alias("vs"))
         )
-        large = (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # small-star: neighbors w <= u link to the min neighbor
-        small = (
-            nbrs.filter(F.col("v") <= F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select(F.col("u"), F.col("m").alias("v")))
-        )
-        # the checkpoint truncates lineage each round — iterative
-        # self-joins otherwise grow the logical plan exponentially —
-        # and its observe carries the convergence signature for free
-        e, sig = _ckpt_with_signature(
-            large.union(small)
-            .filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
+        # the checkpoint truncates lineage each round — the iterated
+        # plan otherwise grows every round — and its observe carries
+        # the convergence signature for free
+        e, sig = _normalize_ckpt(
+            star.select(
+                F.explode(F.concat("vs", F.array("u"))).alias("u"),
+                F.least("mn", "u").alias("v"),
+            )
         )
         if sig == prev_sig:
             break
         prev_sig = sig
 
-    comp = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    comp = comp.groupBy("id").agg(F.min("component").alias("component"))
-    roots = comp.select(F.col("component").alias("id")).distinct().withColumn(
-        "component", F.col("id")
-    )
-    return comp.unionByName(roots).groupBy("id").agg(
-        F.min("component").alias("component")
+    # each u takes its smallest linked v; every v also labels itself,
+    # which covers the roots (and, when the loop was cut short, nodes
+    # seen only as a smaller end)
+    return (
+        e.union(e.select(F.col("v").alias("u"), "v"))
+        .groupBy(F.col("u").alias("id"))
+        .agg(F.min("v").alias("component"))
     )
 
 

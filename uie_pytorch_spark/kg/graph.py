@@ -3,11 +3,10 @@
 mention-level triple table onto canonical entity ids and aggregate one
 row per (subj_id, pred, obj_id) graph edge.
 
-The canonical map is whatever canonicalization tier produced it —
-exact normalization (canonicalize.exact_canonical), or the full
+The canonical map is whatever canonicalization produced it — the
 normalize + MinHash-LSH + connected-components pipeline
-(canonicalize.canonicalize_mentions) — this module only requires
-(surface, canonical_id) rows, one per distinct surface.
+(canonicalize.canonicalize_mentions) in the CLI — this module only
+requires (surface, canonical_id) rows, one per distinct surface.
 
 Scale shape: two keyed equi-joins (surface -> id on each endpoint; the
 canonical map shuffles once per side, AQE broadcasts it when small)

@@ -307,7 +307,8 @@ def near_dup_canonical(
 
     Scale shape: every step is the audited scale path (one content-hash
     groupBy, banded equi-join, candidate-only Jaccard on shingle arrays,
-    small/large-star CC with per-round lineage cuts); no all-pairs work
+    small/large-star CC at one aggregate per round with per-round
+    lineage cuts); no all-pairs work
     anywhere. ``max_bucket_size`` additionally caps LSH band buckets
     (see lsh_candidate_pairs) as the backstop for near-identical — not
     identical — boilerplate families; it defaults ON

@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
-    """Round-robin repartition ``df`` up to defaultParallelism x
-    ``multiplier`` partitions IF it currently has fewer — a
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` up to defaultParallelism
+    partitions IF it currently has fewer — a
     parallelism floor for compute-bound projections, never a
     coalesce. Deterministic results: every caller's downstream
     computation is partition-order independent (per-row projections,
@@ -38,7 +38,7 @@ def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
     if df.isStreaming:  # micro-batch sizing is the stream's concern
         return df
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * multiplier
+    target = sc.defaultParallelism
     try:
         current = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - planning failure: skip

@@ -348,8 +348,8 @@ def stream_edges_delta(
 ):
     """Stage 3 of the incremental KG pipeline: fold the triple stream
     that stage 1 (stream_extract_dedup) emits into per-epoch FUSED
-    edge deltas — each micro-batch is canonicalized (exact tier:
-    lower/trim surfaces) and collapsed to one noisy-or-fused row per
+    edge deltas — each micro-batch is canonicalized (lower/trim
+    surfaces) and collapsed to one noisy-or-fused row per
     fact (kg.graph.fuse_triples), then written with the idempotent
     per-epoch overwrite, so a replayed epoch replaces its own delta
     instead of double-counting evidence.
