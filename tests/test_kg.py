@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import functions as F
 
 from uie_pytorch_spark.kg import canonicalize as C
@@ -65,6 +67,9 @@ def test_connected_components_empty_selfloop_converged(spark):
     assert [f.name for f in C.connected_components(empty).schema] == [
         "id", "component",
     ]
+    # the empty result is built on the JVM, not from a Python RDD
+    plan = C.connected_components(empty)._jdf.queryExecution().toString()
+    assert "ExistingRDD" not in plan
 
     loops = spark.createDataFrame([(5, 5), (7, 7)], "src: long, dst: long")
     assert C.connected_components(loops).count() == 0
@@ -85,6 +90,24 @@ def test_connected_components_empty_selfloop_converged(spark):
     comp = {r["id"]: r["component"] for r in rows}
     assert len(rows) == 4 and set(comp) == {1, 2, 3, 4}
     assert set(comp.values()) <= {1, 2, 3, 4}
+
+
+def test_connected_components_releases_superseded_checkpoints(spark):
+    """Each round's localCheckpoint is released once the next round is
+    materialized; the last one, which the result reads, stays until
+    ``held`` is closed."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "src: long, dst: long"
+    )
+    before = persisted()
+    with ExitStack() as held:
+        comps = C.connected_components(edges, held=held)
+        assert len(persisted() - before) == 1
+        assert {r["component"] for r in comps.collect()} == {0}
+    assert not persisted() - before
 
 
 def test_connected_components_large_mixed_graph(spark):

@@ -5,8 +5,11 @@ clean run and that done partitions are skipped."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from uie_pytorch_spark import cli
@@ -45,12 +48,22 @@ def test_salted_partition_key_spreads_hot_domain(spark):
     assert mx < 0.6 * total
 
 
-def test_resume_produces_identical_output(spark, tmp_path):
+@pytest.fixture(scope="module")
+def clean_run(spark, tmp_path_factory):
+    """An uninterrupted 4-bucket run over the 24-page corpus (every
+    bucket non-empty): its triples set and its (name, type) schema."""
+    pages = fixture_web_pages(spark, n_docs=24, seed=9)
+    run = CheckpointedRun(
+        spark, str(tmp_path_factory.mktemp("clean")), run_id="r1", buckets=4
+    )
+    triples = run.run(pages, _extract_fn(spark))
+    return _triples_set(triples), [(f.name, f.dataType) for f in triples.schema]
+
+
+def test_resume_produces_identical_output(spark, tmp_path, clean_run):
     pages = fixture_web_pages(spark, n_docs=24, seed=9).cache()
     fn = _extract_fn(spark)
-
-    clean = CheckpointedRun(spark, str(tmp_path / "clean"), run_id="r1", buckets=4)
-    clean_triples = _triples_set(clean.run(pages, fn))
+    clean_triples, _ = clean_run
 
     resumed = CheckpointedRun(spark, str(tmp_path / "res"), run_id="r1", buckets=4)
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -73,10 +86,70 @@ def test_resume_produces_identical_output(spark, tmp_path):
     assert all(r["count"] == 1 for r in per_part)
 
 
+def test_empty_buckets_commit_lineage_only(spark, tmp_path, clean_run):
+    """At 8 buckets this corpus leaves buckets 1 and 2 empty: each
+    commits its lineage row and nothing else (no extraction, no
+    triples directory), and the triples equal the 4-bucket run's."""
+    pages = fixture_web_pages(spark, n_docs=24, seed=9).cache()
+    fn, calls = _extract_fn(spark), []
+
+    def counting_fn(part):
+        calls.append(part)
+        return fn(part)
+
+    run = CheckpointedRun(spark, str(tmp_path), run_id="r1", buckets=8)
+    triples = _triples_set(run.run(pages, counting_fn))
+
+    assert len(calls) == 6
+    lin = spark.read.parquet(run.lineage_path).filter(F.col("status") == "done")
+    rows = {r["part_key"]: r for r in lin.collect()}
+    assert lin.count() == 8 and sorted(rows) == list(range(8))
+    for k in (1, 2):
+        assert rows[k]["rows_in"] == rows[k]["triples_out"] == 0
+        assert not os.path.exists(os.path.join(run.triples_path, f"part_key={k}"))
+    assert triples == clean_run[0]
+
+
+def test_all_buckets_empty_returns_empty_triples(spark, tmp_path, clean_run):
+    """An input with no rows writes a done row per bucket and no
+    triples, and still returns a triples table with the schema of a
+    non-empty run."""
+    pages = fixture_web_pages(spark, n_docs=24, seed=9).limit(0)
+    run = CheckpointedRun(spark, str(tmp_path), run_id="r1", buckets=4)
+    triples = run.run(pages, _extract_fn(spark))
+
+    assert triples.count() == 0
+    assert [(f.name, f.dataType) for f in triples.schema] == clean_run[1]
+    assert run.completed_partitions() == [0, 1, 2, 3]
+    assert spark.read.parquet(run.lineage_path).count() == 4
+    assert not os.path.exists(run.triples_path)
+
+
+def test_cli_runs_no_python_rdd_job(spark, tmp_path, monkeypatch, capsys):
+    """No step of cli.main builds a DataFrame from Python data, so the
+    session never starts a second Python worker pool beside the
+    inference UDF's (8 buckets: empty ones commit on this path too)."""
+    src = str(tmp_path / "pages")
+    fixture_web_pages(spark, n_docs=24, seed=9).write.parquet(src)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("a Python-RDD job on the CLI path")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    cli.main([
+        "--input", src, "--output", str(tmp_path / "out"),
+        "--schema", json.dumps({"竞赛名称": ["主办方"]}, ensure_ascii=False),
+        "--buckets", "8", "--run-id", "r1",
+    ])
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["triples"] > 0
+
+
 def test_cli_backfill_holds_one_buckets_caches(spark, tmp_path, monkeypatch):
     """cli.main owns its engine's persisted stages: each bucket's
     caches are released once the bucket is committed, so a backfill
-    holds one bucket's caches at a time, not every bucket's."""
+    holds one bucket's caches at a time, not every bucket's; and no
+    RDD the run persisted outlives it."""
     # RDD ids, not a count: the JVM holds persisted RDDs weakly, so
     # ones leaked by earlier tests can vanish mid-test
     def persisted():
@@ -97,11 +170,15 @@ def test_cli_backfill_holds_one_buckets_caches(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(CheckpointedRun, "_append_lineage", recording_append)
     src = str(tmp_path / "pages")
     fixture_web_pages(spark, n_docs=24, seed=9).write.parquet(src)
+    before = persisted()
     cli.main([
         "--input", src, "--output", str(tmp_path / "out"),
         "--schema", json.dumps({"竞赛名称": ["主办方"]}, ensure_ascii=False),
         "--buckets", "4", "--run-id", "r1",
     ])
+    # and the run leaves nothing persisted that it created:
+    # canonicalization's caches and CC checkpoints are released too
+    assert persisted() <= before
 
     assert len(starts) == len(commits) == 4
     buckets = [commit - start for start, commit in zip(starts, commits)]

@@ -25,6 +25,7 @@ few thousand pages — pass ``--driver-memory`` (cluster mode:
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import sys
 
@@ -125,8 +126,10 @@ def main(argv=None):
         .distinct()
         .withColumn("mention_id", F.xxhash64("surface"))
     )
-    canon = canonicalize_mentions(mentions)
-    canon.write.mode("overwrite").parquet(f"{args.output}/entities")
+    # the caches canonicalization makes are released once it is written
+    with contextlib.ExitStack() as held:
+        canon = canonicalize_mentions(mentions, held=held)
+        canon.write.mode("overwrite").parquet(f"{args.output}/entities")
 
     # KG edge table: triples collapsed onto canonical entity ids
     from uie_pytorch_spark.kg.graph import entity_edges, surface_canonical_map

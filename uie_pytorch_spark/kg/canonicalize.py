@@ -20,6 +20,8 @@ reaches its reducer as one row per map task.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -76,6 +78,12 @@ def _ckpt_with_signature(df: DataFrame):
     return out, (m["n"], m["s"], m["m"])
 
 
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Release a localCheckpoint. ``DataFrame.unpersist`` does not: the
+    blocks belong to the RDD that the checkpoint's LogicalRDD wraps."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def _normalize_ckpt(pairs: DataFrame):
     """(u, v) pairs -> checkpointed undirected edge set with u > v:
     self-loops dropped, each pair oriented by greatest/least, duplicates
@@ -89,7 +97,7 @@ def _normalize_ckpt(pairs: DataFrame):
 
 
 def connected_components(
-    edges: DataFrame, max_iterations: int = 20
+    edges: DataFrame, max_iterations: int = 20, held: ExitStack | None = None
 ) -> DataFrame:
     """(src, dst) undirected edges -> (id, component) with component =
     min node id in the component. Each round applies large-star and
@@ -106,7 +114,11 @@ def connected_components(
 
     If ``max_iterations`` stops the loop early, every node with an edge
     to another node still gets a row, labelled with a node of its own
-    component."""
+    component.
+
+    Each round's checkpoint is released once the next one is
+    materialized. The last one is read by the returned plan: it is
+    registered on ``held``, whose close releases it, when given."""
     spark = edges.sparkSession
     # the checkpoint cuts the upstream DAG once — edge construction may
     # sit on an expensive lineage (model inference); every CC round
@@ -116,7 +128,9 @@ def connected_components(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
     if prev_sig[0] == 0:
-        return spark.createDataFrame([], "id: long, component: long")
+        _drop_checkpoint(e)
+        # built on the JVM: an empty createDataFrame is a Python RDD
+        return spark.range(0).select("id", F.col("id").alias("component"))
 
     # Seeding prev_sig with the INITIAL edge signature adds one extra
     # exit opportunity (an already-converged star graph breaks after
@@ -131,15 +145,19 @@ def connected_components(
         # the checkpoint truncates lineage each round — the iterated
         # plan otherwise grows every round — and its observe carries
         # the convergence signature for free
-        e, sig = _normalize_ckpt(
+        nxt, sig = _normalize_ckpt(
             star.select(
                 F.explode(F.concat("vs", F.array("u"))).alias("u"),
                 F.least("mn", "u").alias("v"),
             )
         )
+        _drop_checkpoint(e)
+        e = nxt
         if sig == prev_sig:
             break
         prev_sig = sig
+    if held is not None:
+        held.callback(_drop_checkpoint, e)
 
     # each u takes its smallest linked v; every v also labels itself,
     # which covers the roots (and, when the loop was cut short, nodes
@@ -152,11 +170,18 @@ def connected_components(
 
 
 def canonicalize_mentions(
-    mentions: DataFrame, jaccard_threshold: float = 0.6
+    mentions: DataFrame,
+    jaccard_threshold: float = 0.6,
+    held: ExitStack | None = None,
 ) -> DataFrame:
     """Full pipeline: mentions(mention_id, surface) ->
     (mention_id, surface, surface_norm, canonical_surface_id) where
-    near-duplicate normalized surfaces share one canonical id."""
+    near-duplicate normalized surfaces share one canonical id.
+
+    The returned plan reads three caches: the normalized mentions, the
+    distinct surfaces and connected_components' last checkpoint. When
+    ``held`` is given they are registered on it, and the caller closes
+    it once the result is consumed (written or collected)."""
     m = mentions.select(
         "mention_id",
         "surface",
@@ -168,8 +193,11 @@ def canonicalize_mentions(
         .withColumn("sid", F.xxhash64("surface_norm"))
         .persist()
     )
+    if held is not None:
+        held.callback(m.unpersist)
+        held.callback(surfaces.unpersist)
     edges = near_match_edges(surfaces, jaccard_threshold)
-    comps = connected_components(edges)
+    comps = connected_components(edges, held=held)
     canon = surfaces.join(
         comps, surfaces.sid == comps.id, "left"
     ).select(

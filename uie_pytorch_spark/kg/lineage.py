@@ -4,11 +4,12 @@ FIXTURES.md §7 schema).
 The unit of work is a PARTITION KEY: a salted domain bucket of the
 input corpus. A run writes, per partition: the output triples under
 ``out/triples/part_key=<k>/`` and a lineage row recording status and
-metrics. Resume = read the lineage table, skip partitions already
-``done``, process the rest. Because the whole engine is deterministic
-(content-hash ids, batch-invariant model, in-order vote sums), a
-resumed run produces byte-identical triples to a clean one — asserted
-by tests/test_resume.py.
+metrics; a partition with no input rows commits its lineage row only
+(no extraction, no triples directory). Resume = read the lineage
+table, skip partitions already ``done``, process the rest. Because the
+whole engine is deterministic (content-hash ids, batch-invariant model,
+in-order vote sums), a resumed run produces byte-identical triples to
+a clean one — asserted by tests/test_resume.py.
 
 At 10^12-doc scale this maps 1:1 onto Iceberg: partition-level commits
 become snapshot appends and the lineage table is an Iceberg table
@@ -23,6 +24,7 @@ import time
 from dataclasses import dataclass
 from typing import Callable, List
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,23 +84,17 @@ class CheckpointedRun:
 
     def _append_lineage(self, part_key: int, stage: str, status: str,
                         rows_in: int, triples_out: int, wall_ms: int) -> None:
-        import datetime as dt
-
-        row = [
-            (
-                self.run_id,
-                part_key,
-                stage,
-                status,
-                rows_in,
-                triples_out,
-                wall_ms,
-                dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
+        # one row of literals in one task, built on the JVM:
+        # createDataFrame from a Python list would run a Python-RDD job
+        # and start a second Python worker pool beside the model UDF's
+        values = (self.run_id, part_key, stage, status, rows_in,
+                  triples_out, wall_ms, F.current_timestamp())
+        self.spark.range(1, numPartitions=1).select(
+            *(
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(values, LINEAGE_SCHEMA.fields)
             )
-        ]
-        self.spark.createDataFrame(row, LINEAGE_SCHEMA).write.mode(
-            "append"
-        ).parquet(self.lineage_path)
+        ).write.mode("append").parquet(self.lineage_path)
 
     def run(
         self,
@@ -108,8 +104,11 @@ class CheckpointedRun:
     ) -> DataFrame:
         """Process every not-yet-done partition: docs in the bucket ->
         extract_fn -> append triples under part_key=<k> + lineage row.
+        A partition with no input rows commits its lineage row only:
+        no extract_fn call, no triples write, no read-back count.
         ``fail_after_partitions`` injects a crash for the resume test.
-        Returns the full triples table.
+        Returns the full triples table (when every partition was empty,
+        extract_fn's output on the empty input, for its schema).
 
         Scan shape: the input is keyed and persisted ONCE, and every
         bucket's rows_in comes from ONE groupBy job over that cache —
@@ -142,18 +141,29 @@ class CheckpointedRun:
                 ):
                     raise RuntimeError(f"injected failure before partition {k}")
                 t0 = time.monotonic()
-                part = keyed.filter(F.col("part_key") == k)
-                triples = extract_fn(part.drop("part_key"))
-                out_path = os.path.join(self.triples_path, f"part_key={k}")
-                triples.write.mode("overwrite").parquet(out_path)
-                # read-back count = verify the COMMITTED state, not the
-                # in-memory plan (cheap: local parquet footer scan)
-                n_out = self.spark.read.parquet(out_path).count()
+                rows_in = rows_in_by_key.get(k, 0)
+                n_out = 0
+                if rows_in:
+                    part = keyed.filter(F.col("part_key") == k)
+                    triples = extract_fn(part.drop("part_key"))
+                    out_path = os.path.join(self.triples_path, f"part_key={k}")
+                    triples.write.mode("overwrite").parquet(out_path)
+                    # read-back count = verify the COMMITTED state, not the
+                    # in-memory plan (cheap: local parquet footer scan)
+                    n_out = self.spark.read.parquet(out_path).count()
                 self._append_lineage(
-                    k, "extract", "done", rows_in_by_key.get(k, 0), n_out,
+                    k, "extract", "done", rows_in, n_out,
                     int((time.monotonic() - t0) * 1000),
                 )
                 processed += 1
         finally:
             keyed.unpersist()
-        return self.spark.read.parquet(self.triples_path)
+        try:
+            return self.spark.read.parquet(self.triples_path)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+        # no partition ever had input rows
+        return extract_fn(pages.limit(0)).withColumn(
+            "part_key", F.lit(None).cast("int")
+        )
