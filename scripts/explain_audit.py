@@ -48,6 +48,25 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def tree_of(df) -> str:
+    """The physical operator tree alone, one line (cut at 120 chars)
+    per operator. A cached relation prints as one InMemoryTableScan
+    leaf, where explain() would nest its whole plan, AQE's initial and
+    final copies both, so a stage that reads caches stays readable."""
+
+    def walk(p, depth):
+        lines = [("  " * depth + p.simpleString(25))[:120]]
+        kids = p.children()
+        for i in range(kids.size()):
+            lines += walk(kids.apply(i), depth + 1)
+        return lines
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return "\n".join(walk(plan, 0))
+
+
 def main():
     from uie_pytorch_spark.session import get_spark
 
@@ -65,25 +84,34 @@ def main():
          plan_of(pruned))
     )
 
-    # 2. engine stage plan (single stage, chunk->dedup->infer->join)
+    # 2. engine stage plan: the CHILD stage, the one that decodes cls
+    # answers (a root stage's probe finds none and drops the vote)
     from uie_pytorch_spark.engine import UIEConfig, UIEEngine
 
     eng = UIEEngine(spark, {"subject entity": ["related fact"]}, UIEConfig(lang="en"))
-    node = eng.tree.children[0]
-    examples = eng._with_mpl(
-        eng._build_examples(node, pruned, None), node, None
+    root = eng.tree.children[0]
+    parents = eng._run_stage(
+        root, eng._with_mpl(eng._build_examples(root, pruned, None), root, None)
+    ).persist()
+    node = root.children[0]
+    stage = eng._run_stage(
+        node, eng._with_mpl(eng._build_examples(node, pruned, parents), node, parents)
     )
-    stage = eng._run_stage(node, examples)
     sections.append(
-        ("Extraction stage (chunk explode -> dedup -> mapInArrow -> join-back -> vote)",
-         "Expect: exactly one Exchange for the dedup distinct, one "
-         "repartition Exchange before MapInArrow (explicit, compute-bound "
-         "stage), join-back via AQE (broadcast when records side is small), "
-         "and a small vote aggregate. html/binary columns never appear, "
-         "and NO driver-side job exists for the window size (mpl is a "
-         "literal for root stages).",
-         plan_of(stage))
+        ("Extraction child stage (chunk explode -> dedup -> mapInArrow -> join-back -> vote)",
+         "Expect: the parent stage and this stage's decoded records "
+         "(dedup distinct -> repartition -> MapInArrow, materialized by "
+         "the cls probe) enter as InMemoryTableScan leaves; the window "
+         "size mpl joins as a broadcast 1-row aggregate; the join-back "
+         "is AQE's choice (broadcast when the records side is small); "
+         "the cls vote is ONE ObjectHashAggregate pair keyed (doc_id, "
+         "ex_id) behind one Exchange — no explicit repartition, no "
+         "min_by. html/binary columns never appear. Operator tree only "
+         "(tree_of).",
+         tree_of(stage))
     )
+    eng.unpersist()
+    parents.unpersist()
 
     # 3. broadcast star join
     from uie_pytorch_spark.queries import QUERIES

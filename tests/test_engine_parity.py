@@ -146,3 +146,68 @@ def test_engine_split_sentence_mode(spark):
         UIEEngine(spark, schema, UIEConfig(split_sentence=True)).extract(docs)
     )
     assert s == o
+
+
+def test_kernel_keeps_first_cls_answer_per_row(monkeypatch):
+    """The kernel emits at most one classification answer per row, the
+    first in decode order, and span records pass through unchanged."""
+    from uie_pytorch_spark.core import infer
+    from uie_pytorch_spark.core.model import get_model
+
+    prompt = "positive or negative"  # answers sliced from the prompt
+    # (start, end) < 0 are prompt-region offsets shifted by len(prompt)+1
+    monkeypatch.setattr(
+        infer,
+        "decode_example",
+        lambda *a, **k: [(-21, -13, 0.9), (0, 4, 0.8), (-9, -1, 0.7)],
+    )
+    out = infer.infer_decode_batch(get_model(), [prompt], ["good food"])
+    assert out == [
+        [
+            {"text": "positive", "start": None, "end": None, "prob": 0.9,
+             "is_cls": True},
+            {"text": "good", "start": 0, "end": 4, "prob": 0.8,
+             "is_cls": False},
+        ]
+    ]
+
+
+def test_cls_vote_ties_and_mean_match_oracle(spark):
+    """One-aggregate vote: count beats prob sum, sum breaks a count tie,
+    the earliest chunk breaks a full tie; the probability is the mean
+    of an in-chunk-order sum. Each winner equals the eager merge's."""
+    from oracle_uie import _merge_example
+    from uie_pytorch_spark.engine import _cls_vote
+
+    answers = {  # ex_id -> [(pos, text, prob)] in chunk order
+        1: [(0, "A", 0.9), (1, "B", 0.6), (2, "B", 0.1)],  # count wins
+        2: [(0, "A", 0.6), (1, "B", 0.9)],  # sum breaks the count tie
+        3: [(0, "B", 0.5), (1, "A", 0.5)],  # earliest chunk breaks the tie
+        4: [(0, "C", 0.1), (1, "C", 0.2), (2, "C", 0.3)],  # mean, fold order
+    }
+    expected = {1: ("B", (0.6 + 0.1) / 2), 2: ("B", 0.9), 3: ("B", 0.5),
+                4: ("C", (0.1 + 0.2 + 0.3) / 3)}
+    rows = [
+        (7, ex, pos, text, prob, "p", f"parent{ex}", ex, ex + 1, 0.5)
+        for ex, recs in answers.items()
+        for pos, text, prob in reversed(recs)  # the vote must sort by pos
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "doc_id long, ex_id long, pos int, text string, prob double, "
+        "parent_path string, parent_text string, parent_start long, "
+        "parent_end long, parent_prob double",
+    )
+    got = {r["ex_id"]: r for r in _cls_vote(df).collect()}
+    assert sorted(got) == sorted(answers)
+    for ex, recs in answers.items():
+        r = got[ex]
+        assert (r["text"], r["prob"]) == expected[ex]
+        (merged,) = _merge_example(
+            [[{"text": t, "prob": p, "is_cls": True}] for _, t, p in recs],
+            [0] * len(recs),
+        )
+        assert (r["text"], r["prob"]) == (merged["text"], merged["probability"])
+        assert (r["doc_id"], r["parent_path"], r["parent_text"],
+                r["parent_start"], r["parent_end"], r["parent_prob"]) == (
+            7, "p", f"parent{ex}", ex, ex + 1, 0.5)

@@ -14,13 +14,11 @@ from __future__ import annotations
 
 from typing import Dict, List, Sequence
 
-import numpy as np
-
 from .model import TinyUIE, forward_bucketed
 from .spans import char_spans_to_results, decode_example
 from .tokenizer import encode_batch
 
-# A record: {"ord": int, "text": str, "start": int|None, "end": int|None,
+# A record: {"text": str, "start": int|None, "end": int|None,
 #            "prob": float, "is_cls": bool}
 SpanRecord = Dict
 
@@ -39,7 +37,9 @@ def infer_decode_batch(
     CHUNK-LOCAL char offsets (the caller shifts by the chunk's char
     offset within the document); classification answers carry
     start=end=None and text sliced from the prompt
-    (uie_predictor.py:347-352).
+    (uie_predictor.py:347-352). A row keeps at most ONE classification
+    answer, its first in decode order: the vote reads only a chunk's
+    first answer (uie_predictor.py:529-550 votes with ``[0]``).
     """
     if len(prompts) == 0:
         return []
@@ -56,11 +56,15 @@ def infer_decode_batch(
         )
         results = char_spans_to_results(char_spans, chunk_texts[b], prompts[b])
         records = []
-        for ordinal, r in enumerate(results):
+        cls_seen = False
+        for r in results:
             is_cls = "start" not in r
+            if is_cls:
+                if cls_seen:
+                    continue
+                cls_seen = True
             records.append(
                 {
-                    "ord": ordinal,
                     "text": r["text"],
                     "start": None if is_cls else int(r["start"]),
                     "end": None if is_cls else int(r["end"]),

@@ -17,6 +17,7 @@ ship to executors.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import List, Sequence
 
 import numpy as np
@@ -37,8 +38,15 @@ def char_ids(s: str) -> np.ndarray:
     return VOCAB_OFFSET + (cp % VOCAB_CHARS)
 
 
-def encode_pair(prompt: str, text: str, max_seq_len: int = 512):
-    """Encode one (prompt, text) pair.
+def _char_pieces(s: str):
+    """Char mode: one token per character."""
+    ar = np.arange(len(s), dtype=np.int64)
+    return char_ids(s), np.stack([ar, ar + 1], axis=1)
+
+
+def _assemble(pieces, prompt: str, text: str, max_seq_len: int):
+    """Lay out ``[CLS] prompt [SEP] text [SEP]`` from one mode's
+    ``pieces(s) -> (ids (n,), char offsets (n, 2))``.
 
     Returns dict of 1-D arrays (unpadded length L):
       input_ids, token_type_ids, attention_mask : int64 (L,)
@@ -46,36 +54,33 @@ def encode_pair(prompt: str, text: str, max_seq_len: int = 512):
         the token came from ([CLS]/[SEP]/pad -> [0,0]), matching HF
         fast-tokenizer behavior the decode math depends on.
 
-    If the pair exceeds max_seq_len the TEXT tail is truncated (the
+    If the pair exceeds max_seq_len the prompt is cut to
+    max_seq_len - 3 tokens, then the TEXT tail is truncated (the
     chunker normally prevents this; it can still trigger for prompts
     longer than the stage's lexicographic-max prompt, see
     textnorm.max_predict_len).
     """
-    budget = max_seq_len - 3 - len(prompt)
-    if budget < 0:
-        prompt = prompt[: max_seq_len - 3]
-        budget = 0
-    text = text[:budget]
+    p_ids, p_om = pieces(prompt)
+    p_ids, p_om = p_ids[: max_seq_len - 3], p_om[: max_seq_len - 3]
+    budget = max(max_seq_len - 3 - len(p_ids), 0)
+    t_ids, t_om = pieces(text)
+    t_ids, t_om = t_ids[:budget], t_om[:budget]
 
-    lp, lt = len(prompt), len(text)
+    lp, lt = len(p_ids), len(t_ids)
     L = 1 + lp + 1 + lt + 1
     ids = np.empty(L, dtype=np.int64)
     ids[0] = CLS_ID
-    ids[1 : 1 + lp] = char_ids(prompt)
+    ids[1 : 1 + lp] = p_ids
     ids[1 + lp] = SEP_ID
-    ids[2 + lp : 2 + lp + lt] = char_ids(text)
+    ids[2 + lp : L - 1] = t_ids
     ids[L - 1] = SEP_ID
 
     tt = np.zeros(L, dtype=np.int64)
     tt[2 + lp :] = 1  # text segment + final [SEP]
 
     om = np.zeros((L, 2), dtype=np.int64)
-    ar_p = np.arange(lp, dtype=np.int64)
-    om[1 : 1 + lp, 0] = ar_p
-    om[1 : 1 + lp, 1] = ar_p + 1
-    ar_t = np.arange(lt, dtype=np.int64)
-    om[2 + lp : 2 + lp + lt, 0] = ar_t
-    om[2 + lp : 2 + lp + lt, 1] = ar_t + 1
+    om[1 : 1 + lp] = p_om
+    om[2 + lp : L - 1] = t_om
 
     return {
         "input_ids": ids,
@@ -83,6 +88,11 @@ def encode_pair(prompt: str, text: str, max_seq_len: int = 512):
         "attention_mask": np.ones(L, dtype=np.int64),
         "offset_mapping": om,
     }
+
+
+def encode_pair(prompt: str, text: str, max_seq_len: int = 512):
+    """Encode one (prompt, text) pair per character; see _assemble."""
+    return _assemble(_char_pieces, prompt, text, max_seq_len)
 
 
 # ---------------------------------------------------------------------
@@ -193,54 +203,27 @@ def wordpiece_spans(s: str) -> List[tuple]:
     return pieces
 
 
-def _piece_ids(s: str, pieces: List[tuple]) -> np.ndarray:
-    """Stable token ids for pieces: crc32 of the (##-marked, lowered)
-    piece string — deterministic across processes, no vocab file."""
+def _wp_pieces(s: str):
+    """Built-in wordpiece mode: stable token ids are the crc32 of the
+    (##-marked, lowered) piece string — deterministic across processes,
+    no vocab file."""
     import zlib
 
-    ids = np.empty(len(pieces), dtype=np.int64)
-    for i, (a, b, cont) in enumerate(pieces):
-        tok = ("##" if cont else "") + s[a:b].lower()
-        ids[i] = VOCAB_OFFSET + (zlib.crc32(tok.encode("utf-8")) % VOCAB_CHARS)
-    return ids
+    pieces = wordpiece_spans(s)
+    toks = [("##" if cont else "") + s[a:b].lower() for a, b, cont in pieces]
+    ids = [VOCAB_OFFSET + zlib.crc32(t.encode("utf-8")) % VOCAB_CHARS for t in toks]
+    return np.array(ids, dtype=np.int64), _piece_offsets(pieces)
+
+
+def _piece_offsets(pieces: List[tuple]) -> np.ndarray:
+    """(n, 2) char offsets of (start, end, ...) piece tuples."""
+    return np.array([p[:2] for p in pieces], dtype=np.int64).reshape(-1, 2)
 
 
 def encode_pair_wp(prompt: str, text: str, max_seq_len: int = 512):
-    """Wordpiece-mode ``encode_pair``: identical contract and array
-    shapes; offsets are segment-relative piece spans. When the pair
-    exceeds max_seq_len the TEXT tail is truncated piece-wise."""
-    pp = wordpiece_spans(prompt)
-    if len(pp) > max_seq_len - 3:
-        pp = pp[: max_seq_len - 3]
-    budget = max_seq_len - 3 - len(pp)
-    tp = wordpiece_spans(text)[: max(budget, 0)]
-
-    lp, lt = len(pp), len(tp)
-    L = 1 + lp + 1 + lt + 1
-    ids = np.empty(L, dtype=np.int64)
-    ids[0] = CLS_ID
-    ids[1 : 1 + lp] = _piece_ids(prompt, pp)
-    ids[1 + lp] = SEP_ID
-    ids[2 + lp : 2 + lp + lt] = _piece_ids(text, tp)
-    ids[L - 1] = SEP_ID
-
-    tt = np.zeros(L, dtype=np.int64)
-    tt[2 + lp :] = 1
-
-    om = np.zeros((L, 2), dtype=np.int64)
-    for i, (a, b, _c) in enumerate(pp):
-        om[1 + i, 0] = a
-        om[1 + i, 1] = b
-    for i, (a, b, _c) in enumerate(tp):
-        om[2 + lp + i, 0] = a
-        om[2 + lp + i, 1] = b
-
-    return {
-        "input_ids": ids,
-        "token_type_ids": tt,
-        "attention_mask": np.ones(L, dtype=np.int64),
-        "offset_mapping": om,
-    }
+    """Wordpiece-mode ``encode_pair``: offsets are segment-relative
+    piece spans; truncation is piece-wise."""
+    return _assemble(_wp_pieces, prompt, text, max_seq_len)
 
 
 # ---------------------------------------------------------------------
@@ -328,46 +311,22 @@ def wordpiece_spans_vocab(s: str, vocab: WordpieceVocab) -> List[tuple]:
     return pieces
 
 
+def _vocab_pieces(s: str, vocab: WordpieceVocab):
+    """Vocab-file mode: piece ids are vocab line numbers folded into
+    the embedding range."""
+    pieces = wordpiece_spans_vocab(s, vocab)
+    ids = [VOCAB_OFFSET + (t % VOCAB_CHARS) for _a, _b, t in pieces]
+    return np.array(ids, dtype=np.int64), _piece_offsets(pieces)
+
+
 def encode_pair_wp_vocab(
     prompt: str, text: str, max_seq_len: int, vocab: WordpieceVocab
 ):
-    """Vocab-file variant of ``encode_pair_wp``: same contract; piece
-    ids come from the vocab (folded into the embedding range)."""
-    pp = wordpiece_spans_vocab(prompt, vocab)
-    if len(pp) > max_seq_len - 3:
-        pp = pp[: max_seq_len - 3]
-    budget = max_seq_len - 3 - len(pp)
-    tp = wordpiece_spans_vocab(text, vocab)[: max(budget, 0)]
-
-    lp, lt = len(pp), len(tp)
-    L = 1 + lp + 1 + lt + 1
-    ids = np.empty(L, dtype=np.int64)
-    ids[0] = CLS_ID
-    ids[1 : 1 + lp] = [VOCAB_OFFSET + (t % VOCAB_CHARS) for (_a, _b, t) in pp]
-    ids[1 + lp] = SEP_ID
-    ids[2 + lp : 2 + lp + lt] = [
-        VOCAB_OFFSET + (t % VOCAB_CHARS) for (_a, _b, t) in tp
-    ]
-    ids[L - 1] = SEP_ID
-
-    tt = np.zeros(L, dtype=np.int64)
-    tt[2 + lp :] = 1
-
-    om = np.zeros((L, 2), dtype=np.int64)
-    for i, (a, b, _t) in enumerate(pp):
-        om[1 + i] = (a, b)
-    for i, (a, b, _t) in enumerate(tp):
-        om[2 + lp + i] = (a, b)
-
-    return {
-        "input_ids": ids,
-        "token_type_ids": tt,
-        "attention_mask": np.ones(L, dtype=np.int64),
-        "offset_mapping": om,
-    }
+    """Vocab-file variant of ``encode_pair_wp``: same contract."""
+    return _assemble(partial(_vocab_pieces, vocab=vocab), prompt, text, max_seq_len)
 
 
-_ENCODERS = {"char": encode_pair, "wordpiece-en": encode_pair_wp}
+_PIECES = {"char": _char_pieces, "wordpiece-en": _wp_pieces}
 
 
 def encode_batch(
@@ -387,11 +346,10 @@ def encode_batch(
     shipped like a model artifact).
     """
     if mode.startswith("wordpiece-en@"):
-        vocab = load_vocab(mode.split("@", 1)[1])
-        enc = lambda p, t, msl: encode_pair_wp_vocab(p, t, msl, vocab)  # noqa: E731
+        pieces = partial(_vocab_pieces, vocab=load_vocab(mode.split("@", 1)[1]))
     else:
-        enc = _ENCODERS[mode]
-    encs = [enc(p, t, max_seq_len) for p, t in zip(prompts, texts)]
+        pieces = _PIECES[mode]
+    encs = [_assemble(pieces, p, t, max_seq_len) for p, t in zip(prompts, texts)]
     L = max((e["input_ids"].shape[0] for e in encs), default=0)
     if pad_to is not None:
         L = max(L, pad_to)

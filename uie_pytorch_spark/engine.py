@@ -27,7 +27,7 @@ Design notes for 100 TB scale:
     (subj, pred, obj) triples materialize as plain projections — no
     nested structures are ever shuffled.
   * Deterministic everywhere: example ids are content hashes, vote
-    sums are computed in chunk order via sort_array + aggregate, and
+    sums are computed in chunk order via array_sort + aggregate, and
     the model is bitwise batch-invariant — so results are identical
     across retries, partitionings, and parallelism levels (the
     checkpoint/resume layer in kg/lineage.py depends on this).
@@ -45,18 +45,26 @@ from pyspark.sql import types as T
 from .core.textnorm import DBC_FROM, DBC_TO, dbc2sbc
 from .schema import SchemaNode, build_tree
 
+# one row per kernel record (core.infer.SpanRecord), keyed by its chunk
 _INFER_SCHEMA = T.StructType(
     [
         T.StructField("key", T.LongType()),
         T.StructField("key2", T.LongType()),
-        T.StructField("ord", T.IntegerType()),
-        T.StructField("rtext", T.StringType()),
-        T.StructField("rstart", T.LongType()),
-        T.StructField("rend", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("start", T.LongType()),
+        T.StructField("end", T.LongType()),
         T.StructField("prob", T.DoubleType()),
         T.StructField("is_cls", T.BooleanType()),
     ]
 )
+
+PARENT_COLS = [
+    "parent_path",
+    "parent_text",
+    "parent_start",
+    "parent_end",
+    "parent_prob",
+]
 
 RESULT_COLS = [
     "doc_id",
@@ -68,11 +76,7 @@ RESULT_COLS = [
     "end",
     "prob",
     "is_cls",
-    "parent_path",
-    "parent_text",
-    "parent_start",
-    "parent_end",
-    "parent_prob",
+    *PARENT_COLS,
 ]
 
 
@@ -107,11 +111,13 @@ def _make_infer_udf(
     def infer(batches):
         # late imports: run inside the executor Python worker
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from uie_pytorch_spark.core.infer import infer_decode_batch
         from uie_pytorch_spark.core.model import get_model
 
         model = get_model(seed, model_path=model_path, backend=backend)
+        schema = to_arrow_schema(_INFER_SCHEMA)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -124,40 +130,17 @@ def _make_infer_udf(
                 position_prob=position_prob,
                 tokenizer=tokenizer,
             )
-            keys, keys2, ords, texts, starts, ends, probs, clss = (
-                [], [], [], [], [], [], [], [],
-            )
-            for key, key2, recs in zip(
-                rb.column("key").to_pylist(),
-                rb.column("key2").to_pylist(),
-                records,
-            ):
-                for r in recs:
-                    keys.append(key)
-                    keys2.append(key2)
-                    ords.append(r["ord"])
-                    texts.append(r["text"])
-                    starts.append(r["start"])
-                    ends.append(r["end"])
-                    probs.append(r["prob"])
-                    clss.append(r["is_cls"])
-            acc_spans.add(len(keys))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(keys, pa.int64()),
-                    pa.array(keys2, pa.int64()),
-                    pa.array(ords, pa.int32()),
-                    pa.array(texts, pa.string()),
-                    pa.array(starts, pa.int64()),
-                    pa.array(ends, pa.int64()),
-                    pa.array(probs, pa.float64()),
-                    pa.array(clss, pa.bool_()),
-                ],
-                names=[
-                    "key", "key2", "ord", "rtext", "rstart", "rend",
-                    "prob", "is_cls",
-                ],
-            )
+            rows = [
+                dict(r, key=key, key2=key2)
+                for key, key2, recs in zip(
+                    rb.column("key").to_pylist(),
+                    rb.column("key2").to_pylist(),
+                    records,
+                )
+                for r in recs
+            ]
+            acc_spans.add(len(rows))
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
     return infer
 
@@ -533,13 +516,15 @@ class UIEEngine:
         records = records.persist()
         self._stage_caches.append(records)
         # Round 6: probe the persisted records ONCE per stage and skip
-        # the whole classification-vote subtree when the model decoded
-        # no cls answers (span-only schemas — the flagship — pay three
-        # aggregation stages + their AQE scheduling for provably-empty
-        # output otherwise). The probe's isEmpty also materializes the
-        # inference stage by itself, so the downstream branch jobs read
-        # the cache instead of racing to build it. Output is identical
-        # by construction: an empty cls input aggregates to zero rows.
+        # the classification vote when the model decoded no cls
+        # answers. Both sides run on the perfbench inputs (seed 3): the
+        # flagship root stage decodes 0 answers from 442 model rows and
+        # kg_backfill's 0 from 50, so both skip the vote, while their
+        # child stages decode one in 472 of 906 and 33 of 79 rows. The
+        # probe's isEmpty also materializes the inference stage by
+        # itself, so the downstream branch jobs read the cache instead
+        # of racing to build it. Output is identical by construction:
+        # an empty cls input aggregates to zero rows.
         has_cls = not records.filter(F.col("is_cls")).isEmpty()
 
         right = (
@@ -556,106 +541,83 @@ class UIEEngine:
             "ex_id",
             F.lit(node.path).alias("node_path"),
             F.lit(node.name).alias("node_name"),
-            F.col("rtext").alias("text"),
-            (F.col("rstart") + F.col("chunk_off")).alias("start"),
-            (F.col("rend") + F.col("chunk_off")).alias("end"),
+            "text",
+            (F.col("start") + F.col("chunk_off")).alias("start"),
+            (F.col("end") + F.col("chunk_off")).alias("end"),
             "prob",
-            F.col("is_cls"),
-            "parent_path",
-            "parent_text",
-            "parent_start",
-            "parent_end",
-            "parent_prob",
+            "is_cls",
+            *PARENT_COLS,
         )
 
         if not has_cls:
             return span_rows.select(RESULT_COLS)
 
-        # classification vote (uie_predictor.py:529-550): per chunk
-        # only the FIRST cls record counts; per example the winner is
-        # max by (count, prob sum), ties -> earliest chunk; reported
-        # probability is the mean. Sums run in chunk order (in-order
-        # fold) for bitwise determinism.
-        # Round 6: ONE exchange for the whole vote chain — hash
-        # partitioning by (doc_id, ex_id) satisfies the clustering
-        # requirement of all three groupBys ((doc,ex,pos), (doc,ex,
-        # rtext), (doc,ex) are supersets), so the two downstream
-        # aggregations run exchange-free where the old chain paid
-        # three shuffles (guide §2.4: establish the partitioning once).
-        cls_in = joined.filter(F.col("is_cls")).repartition(
-            "doc_id", "ex_id"
-        )
-        cls_first = (
-            cls_in
-            .groupBy("doc_id", "ex_id", "pos")
-            .agg(
-                F.min_by(
-                    F.struct("rtext", "prob"), F.col("ord")
-                ).alias("first_rec"),
-                F.first("parent_path", ignorenulls=False).alias("parent_path"),
-                F.first("parent_text").alias("parent_text"),
-                F.first("parent_start").alias("parent_start"),
-                F.first("parent_end").alias("parent_end"),
-                F.first("parent_prob").alias("parent_prob"),
+        cls_rows = _cls_vote(
+            joined.filter(F.col("is_cls")).select(
+                "doc_id", "ex_id", "pos", "text", "prob", *PARENT_COLS
             )
-            .select(
-                "doc_id",
-                "ex_id",
-                "pos",
-                F.col("first_rec.rtext").alias("rtext"),
-                F.col("first_rec.prob").alias("prob"),
-                "parent_path",
-                "parent_text",
-                "parent_start",
-                "parent_end",
-                "parent_prob",
-            )
+        ).select(
+            "doc_id",
+            "ex_id",
+            F.lit(node.path).alias("node_path"),
+            F.lit(node.name).alias("node_name"),
+            "text",
+            F.lit(None).cast("long").alias("start"),
+            F.lit(None).cast("long").alias("end"),
+            "prob",
+            F.lit(True).alias("is_cls"),
+            *PARENT_COLS,
         )
-        per_option = cls_first.groupBy("doc_id", "ex_id", "rtext").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("pos", "prob"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["prob"],
-            ).alias("sum_prob"),
-            F.min("pos").alias("first_pos"),
-            F.first("parent_path").alias("parent_path"),
-            F.first("parent_text").alias("parent_text"),
-            F.first("parent_start").alias("parent_start"),
-            F.first("parent_end").alias("parent_end"),
-            F.first("parent_prob").alias("parent_prob"),
+        return span_rows.select(RESULT_COLS).unionByName(cls_rows)
+
+
+def _cls_vote(answers: DataFrame) -> DataFrame:
+    """Classification vote (uie_predictor.py:529-550) in ONE aggregate.
+
+    ``answers``: (doc_id, ex_id, pos, text, prob, parent_*) with at
+    most one answer per chunk ``pos`` (the kernel keeps each chunk's
+    first). Per example the winning option is the max by (count, prob
+    sum), ties -> earliest chunk; its reported probability is the mean.
+    Returns (doc_id, ex_id, text, prob, parent_*), one row per example.
+
+    The answers are collected sorted by chunk, so every option's sum
+    is an in-order fold — bitwise deterministic across partitionings.
+    parent_* are constant per example (ex_id hashes the parent span).
+    """
+    # per distinct option, its answers (still in chunk order)
+    groups = F.transform(
+        F.array_distinct(F.col("answers.text")),
+        lambda t: F.filter("answers", lambda a: a["text"] == t),
+    )
+    # structs compare field by field: count, sum, then the earliest
+    # chunk; text never decides (an option's first pos is unique)
+    winner = F.array_max(
+        F.transform(
+            groups,
+            lambda g: F.struct(
+                F.size(g).alias("cnt"),
+                F.aggregate(g, F.lit(0.0), lambda acc, a: acc + a["prob"]).alias(
+                    "sum_prob"
+                ),
+                (-g[0]["pos"]).alias("neg_pos"),
+                g[0]["text"].alias("text"),
+            ),
         )
-        cls_rows = (
-            per_option.groupBy("doc_id", "ex_id")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        "rtext", "cnt", "sum_prob",
-                        "parent_path", "parent_text", "parent_start",
-                        "parent_end", "parent_prob",
-                    ),
-                    F.struct(
-                        F.col("cnt"), F.col("sum_prob"), (-F.col("first_pos"))
-                    ),
-                ).alias("w")
-            )
-            .select(
-                "doc_id",
-                "ex_id",
-                F.lit(node.path).alias("node_path"),
-                F.lit(node.name).alias("node_name"),
-                F.col("w.rtext").alias("text"),
-                F.lit(None).cast("long").alias("start"),
-                F.lit(None).cast("long").alias("end"),
-                (F.col("w.sum_prob") / F.col("w.cnt")).alias("prob"),
-                F.lit(True).alias("is_cls"),
-                F.col("w.parent_path").alias("parent_path"),
-                F.col("w.parent_text").alias("parent_text"),
-                F.col("w.parent_start").alias("parent_start"),
-                F.col("w.parent_end").alias("parent_end"),
-                F.col("w.parent_prob").alias("parent_prob"),
-            )
+    )
+    return (
+        answers.groupBy("doc_id", "ex_id")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("pos", "text", "prob"))).alias(
+                "answers"
+            ),
+            *[F.first(c).alias(c) for c in PARENT_COLS],
         )
-        return span_rows.select(RESULT_COLS).unionByName(
-            cls_rows.select(RESULT_COLS)
+        .withColumn("w", winner)
+        .select(
+            "doc_id",
+            "ex_id",
+            F.col("w.text").alias("text"),
+            (F.col("w.sum_prob") / F.col("w.cnt")).alias("prob"),
+            *PARENT_COLS,
         )
+    )

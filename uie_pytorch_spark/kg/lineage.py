@@ -29,6 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# wall_ms: the bucket's extraction, triples write and read-back count;
+# NOT the write of the lineage row that carries it (a row cannot time
+# its own write), so an empty bucket reads ~0 ms.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),
@@ -107,6 +110,8 @@ class CheckpointedRun:
         A partition with no input rows commits its lineage row only:
         no extract_fn call, no triples write, no read-back count.
         ``fail_after_partitions`` injects a crash for the resume test.
+        A lineage row's ``wall_ms`` is taken before that row is written
+        (see LINEAGE_SCHEMA).
         Returns the full triples table (when every partition was empty,
         extract_fn's output on the empty input, for its schema).
 

@@ -3,14 +3,12 @@ SpanEvaluator (/root/reference/utils.py:154-237) re-expressed as
 joins + one aggregation — |pred ∩ gold| is an inner join on the span
 identity key, and the three counts become P/R/F1 in a final select.
 
-Used both for parity scoring (engine triples vs oracle triples) and
-for per-class debug eval (groupBy class like evaluate.py:103-146).
+Used for parity scoring (engine triples vs oracle triples).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 SPAN_KEY = ["doc_id", "prompt", "start", "end"]
 
@@ -40,44 +38,3 @@ def span_prf(pred: DataFrame, gold: DataFrame, key=None) -> DataFrame:
         "precision: double, recall: double, f1: double",
     )
 
-
-def span_prf_by_class(
-    pred: DataFrame, gold: DataFrame, class_col: str, key=None
-) -> DataFrame:
-    """Per-class debug eval (evaluate.py debug mode): P/R/F1 grouped
-    by a class column present in both inputs."""
-    key = key or SPAN_KEY
-    p = pred.select(class_col, *key).distinct()
-    g = gold.select(class_col, *key).distinct()
-    c = (
-        p.join(g, [class_col, *key])
-        .groupBy(class_col)
-        .agg(F.count(F.lit(1)).alias("num_correct"))
-    )
-    np_ = p.groupBy(class_col).agg(F.count(F.lit(1)).alias("num_infer"))
-    ng = g.groupBy(class_col).agg(F.count(F.lit(1)).alias("num_label"))
-    out = (
-        np_.join(ng, class_col, "outer")
-        .join(c, class_col, "left")
-        .fillna(0, ["num_correct", "num_infer", "num_label"])
-    )
-    precision = F.when(
-        F.col("num_infer") > 0, F.col("num_correct") / F.col("num_infer")
-    ).otherwise(0.0)
-    recall = F.when(
-        F.col("num_label") > 0, F.col("num_correct") / F.col("num_label")
-    ).otherwise(0.0)
-    return out.select(
-        class_col,
-        "num_correct",
-        "num_infer",
-        "num_label",
-        precision.alias("precision"),
-        recall.alias("recall"),
-        F.when(
-            F.col("num_correct") > 0,
-            2 * precision * recall / (precision + recall),
-        )
-        .otherwise(0.0)
-        .alias("f1"),
-    )

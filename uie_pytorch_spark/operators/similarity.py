@@ -6,10 +6,9 @@ Two paths:
     identical across Spark partitionings AND across engines (the
     DuckDB oracle computes the same decimals). This is the
     correctness baseline.
-  * float fast path (zip_with dot product, native codegen) for
-    benchmarking, plus an LSH-bucketed variant (sign-random-
-    projection by deterministic hash planes) as the 100 TB scale
-    path: candidates meet in buckets, exact rerank within bucket.
+  * LSH-bucketed variants (sign-random-projection by deterministic
+    hash planes, or IVF centroids) as the 100 TB scale path:
+    candidates meet in buckets, exact rerank within bucket.
 
 Near-dup by cosine >= tau is expressed without sqrt:
     dot > 0  AND  dot^2 >= tau^2 * |a|^2 * |b|^2
@@ -90,36 +89,6 @@ def topk_by_dot(emb: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
         dots.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank")
-    )
-
-
-def cosine_topk_float(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Float fast path: native zip_with/aggregate dot product + norms.
-    No oracle (float summation order is engine-specific); used by
-    bench and as the brute-force ANN baseline."""
-    qv = queries.join(emb, "vec_id").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    joined = qv.crossJoin(emb.select("vec_id", "embedding")).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    dot = F.aggregate(
-        F.zip_with("qe", "embedding", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    nq = F.sqrt(F.aggregate(F.transform("qe", lambda x: x * x), F.lit(0.0), lambda a, v: a + v))
-    nv = F.sqrt(F.aggregate(F.transform("embedding", lambda x: x * x), F.lit(0.0), lambda a, v: a + v))
-    scored = joined.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot / (nq * nv)).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
     )
 
 

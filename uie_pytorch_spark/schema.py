@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Iterator, List, Optional, Union
+from typing import List, Optional, Union
 
 Schema = Union[str, list, dict]
 
@@ -88,12 +88,3 @@ def _attach(parent: SchemaNode, schema: list) -> None:
                 f"{type(item).__name__}"
             )
 
-
-def bfs(root: SchemaNode) -> Iterator[SchemaNode]:
-    """Stage order: breadth-first over the tree, matching the
-    reference's queue traversal (uie_predictor.py:227-229)."""
-    queue = list(root.children)
-    while queue:
-        node = queue.pop(0)
-        yield node
-        queue.extend(node.children)
