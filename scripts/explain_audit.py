@@ -48,6 +48,15 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def clip(plan: str) -> str:
+    """A plan cut at 6,000 characters, but never inside its operator
+    tree: the tree (the text before the first blank line) is kept
+    whole and only the node details after it are cut."""
+    plan = plan.strip()
+    tree_end = plan.find("\n\n")
+    return plan[: max(6000, tree_end if tree_end >= 0 else len(plan))]
+
+
 def tree_of(df) -> str:
     """The physical operator tree alone, one line (cut at 120 chars)
     per operator. A cached relation prints as one InMemoryTableScan
@@ -455,7 +464,7 @@ def main():
         )
         for title, expectation, plan in sections:
             f.write(f"\n## {title}\n\n*Expectation:* {expectation}\n\n")
-            f.write("```\n" + plan.strip()[:6000] + "\n```\n")
+            f.write("```\n" + clip(plan) + "\n```\n")
     print("wrote PLANS.md")
     spark.stop()
 

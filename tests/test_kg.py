@@ -428,8 +428,9 @@ def test_triangle_counts_no_triangles(spark):
 
 
 def test_merge_edges_equals_fuse_all_at_once(spark):
-    """Associativity: fusing two disjoint batches then merging must
-    equal fusing every mention at once (counts exactly, conf to 1e-9)."""
+    """Associativity: fusing disjoint batches then merging them — two
+    batches in one merge, or three folded pairwise — must equal fusing
+    every mention at once (counts exactly, conf to 1e-9)."""
     from uie_pytorch_spark.kg.graph import fuse_triples
     from uie_pytorch_spark.kg.maintain import merge_edges
 
@@ -442,20 +443,22 @@ def test_merge_edges_equals_fuse_all_at_once(spark):
     m = spark.createDataFrame(rows, schema)
     base = fuse_triples(m.filter("doc_id % 2 = 0"))
     delta = fuse_triples(m.filter("doc_id % 2 = 1"))
-    merged = {
-        (r["subj_id"], r["pred"], r["obj_id"]): r
-        for r in merge_edges(base, delta).collect()
-    }
-    once = {
-        (r["subj_id"], r["pred"], r["obj_id"]): r
-        for r in fuse_triples(m).collect()
-    }
-    assert set(merged) == set(once)
-    for k in once:
-        assert merged[k]["n_mentions"] == once[k]["n_mentions"]
-        assert merged[k]["n_docs"] == once[k]["n_docs"]
-        assert merged[k]["max_prob"] == once[k]["max_prob"]
-        assert abs(merged[k]["conf_noisy_or"] - once[k]["conf_noisy_or"]) < 1e-9
+    b0, b1, b2 = (fuse_triples(m.filter(f"doc_id % 3 = {i}")) for i in range(3))
+
+    def by_key(df):
+        return {(r["subj_id"], r["pred"], r["obj_id"]): r for r in df.collect()}
+
+    once = by_key(fuse_triples(m))
+    for merged in (
+        by_key(merge_edges(base, delta)),
+        by_key(merge_edges(merge_edges(b0, b1), b2)),
+    ):
+        assert set(merged) == set(once)
+        for k in once:
+            assert merged[k]["n_mentions"] == once[k]["n_mentions"]
+            assert merged[k]["n_docs"] == once[k]["n_docs"]
+            assert merged[k]["max_prob"] == once[k]["max_prob"]
+            assert abs(merged[k]["conf_noisy_or"] - once[k]["conf_noisy_or"]) < 1e-9
 
 
 def test_snapshot_latest_supersedes_and_tiebreaks(spark):

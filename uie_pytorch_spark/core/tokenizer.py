@@ -319,13 +319,6 @@ def _vocab_pieces(s: str, vocab: WordpieceVocab):
     return np.array(ids, dtype=np.int64), _piece_offsets(pieces)
 
 
-def encode_pair_wp_vocab(
-    prompt: str, text: str, max_seq_len: int, vocab: WordpieceVocab
-):
-    """Vocab-file variant of ``encode_pair_wp``: same contract."""
-    return _assemble(partial(_vocab_pieces, vocab=vocab), prompt, text, max_seq_len)
-
-
 _PIECES = {"char": _char_pieces, "wordpiece-en": _wp_pieces}
 
 

@@ -23,40 +23,36 @@ from pyspark.sql import functions as F
 _CLAMP = 0.999999999
 
 
-def merge_all(edges: DataFrame) -> DataFrame:
-    """n-ary fold of fused edge rows from ANY number of batches into
-    one standing edge table. Input rows carry (subj_id, pred, obj_id,
-    n_mentions, n_docs, max_prob, conf_noisy_or) — the fuse_triples
-    output schema, possibly many rows per fact key (one per batch that
-    asserted it) — and the merged row re-combines them as if every
-    mention had been fused at once: counts add, max_prob maxes, and
-    noisy-or composes as ``1 - prod(1 - c_i)`` (independent-evidence
-    algebra is associative AND commutative, so any batching of the
-    mentions folds to the same result up to float rounding). ``n_docs``
-    adds because batches partition the crawl by time — a doc lives in
-    exactly one batch.
+def merge_edges(base: DataFrame, delta: DataFrame) -> DataFrame:
+    """Fold a delta batch of fused edges into the standing edge table.
+    Both inputs carry (subj_id, pred, obj_id, n_mentions, n_docs,
+    max_prob, conf_noisy_or) — the fuse_triples output schema — and the
+    merged row re-combines a fact key's rows as if every mention had
+    been fused at once: counts add, max_prob maxes, and noisy-or
+    composes as ``1 - prod(1 - c_i)`` (independent-evidence algebra is
+    associative AND commutative, so any batching of the mentions, folded
+    two at a time in any order, reaches the same result up to float
+    rounding). ``n_docs`` adds because batches partition the crawl by
+    time — a doc lives in exactly one batch.
 
-    Shape: ONE map-side-combinable groupBy on the fact key — never a
-    full-outer join, so a 10^10-edge base table with a 10^6-edge delta
-    moves one partial row per touched fact, and AQE sees a plain
-    aggregate it can coalesce. The log-space rewrite
+    Shape: union + ONE map-side-combinable groupBy on the fact key —
+    never a full-outer join, so a 10^10-edge base table with a
+    10^6-edge delta moves one partial row per touched fact, and AQE
+    sees a plain aggregate it can coalesce. The log-space rewrite
     ``1 - exp(sum(ln(1 - c)))`` keeps the combine a plain SUM."""
     c = F.least(F.col("conf_noisy_or"), F.lit(_CLAMP))
-    return edges.groupBy("subj_id", "pred", "obj_id").agg(
-        F.sum("n_mentions").cast("long").alias("n_mentions"),
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.max("max_prob").cast("double").alias("max_prob"),
-        (F.lit(1.0) - F.exp(F.sum(F.log(F.lit(1.0) - c))))
-        .cast("double")
-        .alias("conf_noisy_or"),
+    return (
+        base.unionByName(delta)
+        .groupBy("subj_id", "pred", "obj_id")
+        .agg(
+            F.sum("n_mentions").cast("long").alias("n_mentions"),
+            F.sum("n_docs").cast("long").alias("n_docs"),
+            F.max("max_prob").cast("double").alias("max_prob"),
+            (F.lit(1.0) - F.exp(F.sum(F.log(F.lit(1.0) - c))))
+            .cast("double")
+            .alias("conf_noisy_or"),
+        )
     )
-
-
-def merge_edges(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold ONE delta batch of fused edges into the standing edge
-    table — the 2-ary special case of merge_all (union + the same
-    combinable groupBy)."""
-    return merge_all(base.unionByName(delta))
 
 
 def snapshot_latest(

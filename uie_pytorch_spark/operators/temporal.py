@@ -146,12 +146,10 @@ def sessionize(
     per key, dense).
 
     Shape: one shuffle+sort per key group and two stacked window
-    functions (lag + running sum) — the batch twin of Structured
-    Streaming's ``session_window``, but deterministic and
-    oracle-replayable (lag/cumsum is plain ANSI SQL; streaming
-    session_window state is not). ``order_tiebreak``: optional column
-    making the within-key order total when timestamps collide (e.g.
-    an event id), so session ids are reproducible run-to-run."""
+    functions (lag + running sum), deterministic and oracle-replayable
+    because lag/cumsum is plain ANSI SQL. ``order_tiebreak``: optional
+    column making the within-key order total when timestamps collide
+    (e.g. an event id), so session ids are reproducible run-to-run."""
     keys: List[str] = [by] if isinstance(by, str) else list(by)
     order = [F.col(on).asc()] + (
         [F.col(order_tiebreak).asc()] if order_tiebreak else []

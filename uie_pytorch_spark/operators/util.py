@@ -35,8 +35,6 @@ def spread(df: DataFrame) -> DataFrame:
     computation is partition-order independent (per-row projections,
     commutative aggs), and Spark's sort-before-repartition keeps the
     row->partition assignment stable under task retries."""
-    if df.isStreaming:  # micro-batch sizing is the stream's concern
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:

@@ -1207,8 +1207,8 @@ def asof_join_events(spark, sf_dir):
 def sessionize_events(spark, sf_dir):
     """Gap-based sessionization (operators/temporal.py): per-user
     dense session ids from a 30-min inactivity gap — lag + running
-    sum, one shuffle+sort; the deterministic batch twin of streaming
-    session_window."""
+    sum, one shuffle+sort; deterministic because lag/cumsum is plain
+    ANSI SQL."""
     ev = _t(spark, sf_dir, "events")
     out = TEMP.sessionize(
         ev, on="ts", by="user_id", gap=1800, order_tiebreak="event_id"
