@@ -57,11 +57,13 @@ def clip(plan: str) -> str:
     return plan[: max(6000, tree_end if tree_end >= 0 else len(plan))]
 
 
-def tree_of(df) -> str:
+def tree_of(df, cached: bool = False) -> str:
     """The physical operator tree alone, one line (cut at 120 chars)
     per operator. A cached relation prints as one InMemoryTableScan
     leaf, where explain() would nest its whole plan, AQE's initial and
-    final copies both, so a stage that reads caches stays readable."""
+    final copies both, so a stage that reads caches stays readable.
+    ``cached=True`` prints instead the plan that builds the cache of
+    the persisted ``df``, as AQE first planned it."""
 
     def walk(p, depth):
         lines = [("  " * depth + p.simpleString(25))[:120]]
@@ -73,6 +75,10 @@ def tree_of(df) -> str:
     plan = df._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan":
         plan = plan.executedPlan()
+    if cached:
+        plan = plan.relation().cachedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.initialPlan()
     return "\n".join(walk(plan, 0))
 
 
@@ -93,31 +99,35 @@ def main():
          plan_of(pruned))
     )
 
-    # 2. engine stage plan: the CHILD stage, the one that decodes cls
-    # answers (a root stage's probe finds none and drops the vote)
+    # 2. engine stage plan: the CHILD level, the one that decodes cls
+    # answers (a root stage's probe finds none and drops the vote); its
+    # two nodes share the level's one stage
     from uie_pytorch_spark.engine import UIEConfig, UIEEngine
 
-    eng = UIEEngine(spark, {"subject entity": ["related fact"]}, UIEConfig(lang="en"))
-    root = eng.tree.children[0]
-    parents = eng._run_stage(
-        root, eng._with_mpl(eng._build_examples(root, pruned, None), root, None)
-    ).persist()
-    node = root.children[0]
-    stage = eng._run_stage(
-        node, eng._with_mpl(eng._build_examples(node, pruned, parents), node, parents)
+    eng = UIEEngine(
+        spark,
+        {"subject entity": ["related fact", "sentiment [positive, negative]"]},
+        UIEConfig(lang="en"),
     )
+    roots = eng.tree.children
+    parents = eng._run_stage(eng._root_examples(roots, pruned)).persist()
+    stage = eng._run_stage(eng._child_examples(roots[0].children, pruned, parents))
     sections.append(
-        ("Extraction child stage (chunk explode -> dedup -> mapInArrow -> join-back -> vote)",
-         "Expect: the parent stage and this stage's decoded records "
-         "(dedup distinct -> repartition -> MapInArrow, materialized by "
-         "the cls probe) enter as InMemoryTableScan leaves; the window "
-         "size mpl joins as a broadcast 1-row aggregate; the join-back "
-         "is AQE's choice (broadcast when the records side is small); "
-         "the cls vote is ONE ObjectHashAggregate pair keyed (doc_id, "
-         "ex_id) behind one Exchange — no explicit repartition, no "
-         "min_by. html/binary columns never appear. Operator tree only "
-         "(tree_of).",
-         tree_of(stage))
+        ("Extraction child level, two nodes in one stage (chunk explode -> dedup -> "
+         "mapInArrow -> join-back -> vote)",
+         "Expect: the parent level and this level's decoded records "
+         "(dedup distinct -> repartition -> ONE MapInArrow serving both "
+         "nodes, materialized by the cls probe) enter as InMemoryTableScan "
+         "leaves; the window sizes mpl come from ONE 1-row aggregate "
+         "(a max prompt per node) cross-joined as a broadcast; the "
+         "join-back is AQE's choice "
+         "(broadcast when the records side is small); the cls vote is "
+         "ONE ObjectHashAggregate pair keyed (doc_id, ex_id) behind one "
+         "Exchange — no explicit repartition, no min_by. html/binary "
+         "columns never appear. Operator trees only (tree_of): the "
+         "level's plan, then the plan of its records cache.",
+         tree_of(stage) + "\n-- records cache --\n"
+         + tree_of(eng._stage_caches[-1], cached=True))
     )
     eng.unpersist()
     parents.unpersist()

@@ -101,21 +101,41 @@ def test_engine_inference_dedup_is_transparent(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id: long, text: string"
     )
-    schema = {"竞赛名称": ["主办方"]}
-    o = flat_spans(OracleUIE(schema).extract(texts))
-    collected = UIEEngine(spark, schema).extract(docs).collect()
-    rows = Counter(
-        (r["doc_id"], r["node_path"], r["text"], r["start"], r["end"],
-         r["parent_text"], r["parent_start"])
-        for r in collected
-    )
-    assert max(rows.values()) == 1, "duplicate result rows emitted"
-    got = {
-        (r["doc_id"], r["node_path"], r["text"], r["start"], r["end"],
-         round(r["prob"], 6))
-        for r in collected
-    }
-    assert got == o
+    # one child node, then three sharing one level (and its join-back)
+    for schema in ({"竞赛名称": ["主办方"]}, SCHEMAS["relation"]):
+        o = flat_spans(OracleUIE(schema).extract(texts))
+        collected = UIEEngine(spark, schema).extract(docs).collect()
+        rows = Counter(
+            (r["doc_id"], r["node_path"], r["text"], r["start"], r["end"],
+             r["parent_text"], r["parent_start"])
+            for r in collected
+        )
+        assert max(rows.values()) == 1, "duplicate result rows emitted"
+        got = {
+            (r["doc_id"], r["node_path"], r["text"], r["start"], r["end"],
+             round(r["prob"], 6))
+            for r in collected
+        }
+        assert got == o
+
+
+def test_level_jobs_do_not_grow_with_node_count(spark):
+    """Every node of a schema level shares one stage: a level with three
+    child nodes runs no more Spark jobs than a level with one."""
+    _, docs = _docs(spark, n=30, seed=11)
+    sc = spark.sparkContext
+    jobs = {}
+    for n, schema in ((1, {"竞赛名称": ["主办方"]}), (3, SCHEMAS["relation"])):
+        group = f"level-jobs-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            engine = UIEEngine(spark, schema)
+            engine.extract(docs).collect()
+            engine.unpersist()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs[3] <= jobs[1], jobs
 
 
 def test_engine_long_docs_chunk_merge(spark):
@@ -188,13 +208,15 @@ def test_cls_vote_ties_and_mean_match_oracle(spark):
     expected = {1: ("B", (0.6 + 0.1) / 2), 2: ("B", 0.9), 3: ("B", 0.5),
                 4: ("C", (0.1 + 0.2 + 0.3) / 3)}
     rows = [
-        (7, ex, pos, text, prob, "p", f"parent{ex}", ex, ex + 1, 0.5)
+        (7, ex, pos, text, prob, f"p/n{ex}", f"n{ex}", "p", f"parent{ex}", ex,
+         ex + 1, 0.5)
         for ex, recs in answers.items()
         for pos, text, prob in reversed(recs)  # the vote must sort by pos
     ]
     df = spark.createDataFrame(
         rows,
         "doc_id long, ex_id long, pos int, text string, prob double, "
+        "node_path string, node_name string, "
         "parent_path string, parent_text string, parent_start long, "
         "parent_end long, parent_prob double",
     )
@@ -208,6 +230,7 @@ def test_cls_vote_ties_and_mean_match_oracle(spark):
             [0] * len(recs),
         )
         assert (r["text"], r["prob"]) == (merged["text"], merged["probability"])
-        assert (r["doc_id"], r["parent_path"], r["parent_text"],
-                r["parent_start"], r["parent_end"], r["parent_prob"]) == (
-            7, "p", f"parent{ex}", ex, ex + 1, 0.5)
+        assert (r["doc_id"], r["node_path"], r["node_name"], r["parent_path"],
+                r["parent_text"], r["parent_start"], r["parent_end"],
+                r["parent_prob"]) == (
+            7, f"p/n{ex}", f"n{ex}", "p", f"parent{ex}", ex, ex + 1, 0.5)

@@ -1,22 +1,24 @@
 """Distributed multi-stage UIE extraction engine.
 
-Re-expresses the reference's eager BFS dataflow
-(/root/reference/uie_predictor.py:212-329) as a driver-side loop over
-schema-tree nodes, where each node stage is pure DataFrame algebra
-around ONE Arrow-vectorized inference UDF:
+Re-expresses the reference's eager BFS dataflow (reference
+uie_predictor.py:212-329), one prompted scan per schema node, as a
+driver-side loop over schema LEVELS. A level's examples carry their
+node (``node_path``/``node_name``) as columns, so every node of a
+level shares one stage: pure DataFrame algebra around ONE
+Arrow-vectorized inference UDF:
 
     examples --(native chunk explode)--> chunks
             --(distinct (prompt, chunk))--> unique model inputs
             --(mapInArrow: tokenize+forward+decode)--> span records
             --(join back, shift by chunk offset)--> span results
             --(groupBy vote for classification items)--> cls results
-            --(prompt-expansion join)--> next stage's examples
+            --(prompt-expansion join)--> next level's examples
 
 Design notes for 100 TB scale:
   * Inference is the dominant cost; identical (prompt, chunk) pairs
     are deduplicated BEFORE the UDF (web corpora repeat boilerplate),
     keyed by xxhash64 — results join back to all owners.
-  * The only shuffles per stage are the dedup distinct, the join back
+  * The only shuffles per level are the dedup distinct, the join back
     (AQE decides broadcast vs shuffle; the unique-inputs side is
     usually far smaller), and a tiny groupBy for classification votes.
     Span results never need a groupBy — offsets are computed from the
@@ -42,7 +44,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .core.textnorm import DBC_FROM, DBC_TO, dbc2sbc
+from .core.textnorm import (
+    DBC_FROM,
+    DBC_TO,
+    MIN_PREDICT_WINDOW,
+    dbc2sbc,
+    max_predict_len,
+)
 from .schema import SchemaNode, build_tree
 
 # one row per kernel record (core.infer.SpanRecord), keyed by its chunk
@@ -236,29 +244,20 @@ class UIEEngine:
 
     def extract(self, docs: DataFrame) -> DataFrame:
         """All spans for all schema nodes; see RESULT_COLS."""
-        docs = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
-        )
-        all_results: List[DataFrame] = []
-        # frontier: node -> result DF of that node's stage
-        queue: List[tuple] = [(c, None) for c in self.tree.children]
-        while queue:
-            node, parent_results = queue.pop(0)
-            examples = self._with_mpl(
-                self._build_examples(node, docs, parent_results),
-                node,
-                parent_results,
+        docs = docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+        out = None
+        level, results = self.tree.children, None
+        while level:
+            results = self._run_stage(
+                self._root_examples(level, docs)
+                if results is None
+                else self._child_examples(level, docs, results)
             )
-            results = self._run_stage(node, examples)
-            if node.children:
+            if any(n.children for n in level):
                 results = results.persist()
                 self._stage_caches.append(results)
-            all_results.append(results)
-            for child in node.children:
-                queue.append((child, results))
-        out = all_results[0]
-        for df in all_results[1:]:
-            out = out.unionByName(df)
+            out = results if out is None else out.unionByName(results)
+            level = [c for n in level for c in n.children]
         return out
 
     def unpersist(self) -> None:
@@ -293,40 +292,64 @@ class UIEEngine:
         )
 
     # ---------- stage construction ----------
+    #
+    # examples: (doc_id, ex_id, node_path, node_name, prompt, text, mpl,
+    # parent_*). ``mpl``, the node's window size, deducts the length of
+    # its LEXICOGRAPHICALLY max prompt (reference quirk,
+    # uie_predictor.py:418; Spark's string max is binary UTF-8 order ==
+    # Python code-point order).
 
-    def _child_prompt_col(self, node: SchemaNode) -> Column:
-        parent_text = F.col("text")
-        if self.config.lang == "en":
-            prefix, suffix = node.en_prompt_parts()
-            if suffix:
-                raw = F.concat(F.lit(prefix + " of "), parent_text, F.lit(suffix))
-            else:
-                raw = F.concat(F.lit(node.name + " of "), parent_text)
-        else:
-            raw = F.concat(parent_text, F.lit("的" + node.name))
-        return _dbc2sbc_col(raw)
-
-    def _build_examples(
-        self, node: SchemaNode, docs: DataFrame, parent_results: Optional[DataFrame]
-    ) -> DataFrame:
-        """examples: (doc_id, ex_id, prompt, text, parent_*)."""
-        if parent_results is None:
-            return docs.select(
+    def _root_examples(self, level: List[SchemaNode], docs: DataFrame) -> DataFrame:
+        """One literal projection of docs per root node: the prompt is
+        the node name, so mpl is a literal too and costs no Spark job."""
+        out = None
+        for node in level:
+            prompt = dbc2sbc(node.name)
+            ex = docs.select(
                 "doc_id",
                 F.xxhash64(F.lit(node.path), F.col("doc_id")).alias("ex_id"),
-                F.lit(dbc2sbc(node.name)).alias("prompt"),
+                F.lit(node.path).alias("node_path"),
+                F.lit(node.name).alias("node_name"),
+                F.lit(prompt).alias("prompt"),
                 "text",
+                F.lit(max_predict_len([prompt], self.config.max_seq_len)).alias("mpl"),
                 F.lit(None).cast("string").alias("parent_path"),
                 F.lit(None).cast("string").alias("parent_text"),
                 F.lit(None).cast("long").alias("parent_start"),
                 F.lit(None).cast("long").alias("parent_end"),
                 F.lit(None).cast("double").alias("parent_prob"),
             )
-        # one example per parent span (prompt-expansion join, the
-        # subject->predicate step; reference uie_predictor.py:315-328).
-        # Parent results join back to docs to recover the full text —
-        # results deliberately don't carry the text column around.
-        parents = parent_results.select(
+            out = ex if out is None else out.unionByName(ex)
+        return out
+
+    def _child_examples(
+        self, level: List[SchemaNode], docs: DataFrame, parents: DataFrame
+    ) -> DataFrame:
+        """One example per (child node, parent span): the prompt-expansion
+        join, the subject->predicate step (uie_predictor.py:243-267,
+        315-328). A literal map sends each parent node's spans to its
+        children, with each child's prompt as the pieces around the
+        parent text: zh ``text + "的" + name``, en ``name + " of " +
+        text`` (a cls node re-appends its options after the text)."""
+        kids: dict = {}
+        for c in level:
+            if self.config.lang == "en":
+                prefix, suffix = c.en_prompt_parts()
+                pre, post = prefix + " of ", suffix
+            else:
+                pre, post = "", "的" + c.name
+            kids.setdefault(c.parent.path, []).append(
+                F.struct(
+                    F.lit(c.path).alias("node_path"),
+                    F.lit(c.name).alias("node_name"),
+                    F.lit(pre).alias("pre"),
+                    F.lit(post).alias("post"),
+                )
+            )
+        kids_of = F.create_map(
+            *[x for path, s in kids.items() for x in (F.lit(path), F.array(*s))]
+        )
+        spans = parents.select(
             "doc_id",
             F.col("ex_id").alias("parent_ex"),
             F.col("node_path").alias("parent_path"),
@@ -334,82 +357,57 @@ class UIEEngine:
             F.col("start").alias("parent_start"),
             F.col("end").alias("parent_end"),
             F.col("prob").alias("parent_prob"),
-            self._child_prompt_col(node).alias("prompt"),
-        )
-        return parents.join(docs, "doc_id").select(
-            "doc_id",
-            F.xxhash64(
-                F.col("parent_ex"),
-                F.lit(node.path),
-                F.col("parent_text"),
-                F.coalesce(F.col("parent_start"), F.lit(-1)),
-                F.coalesce(F.col("parent_end"), F.lit(-1)),
-            ).alias("ex_id"),
+            F.inline(kids_of[F.col("node_path")]),
+        ).withColumn(
             "prompt",
-            "text",
-            "parent_path",
-            "parent_text",
-            "parent_start",
-            "parent_end",
-            "parent_prob",
+            _dbc2sbc_col(F.concat("pre", "parent_text", "post")),
         )
-
-    def _with_mpl(
-        self,
-        examples: DataFrame,
-        node: SchemaNode,
-        parent_results: Optional[DataFrame],
-    ) -> DataFrame:
-        """Attach the stage window size as an ``mpl`` column WITHOUT a
-        driver-side job.
-
-        Reference quirk (uie_predictor.py:418): the window deducts the
-        length of the LEXICOGRAPHICALLY max prompt (Spark string max is
-        binary-collation UTF-8 order == Python code-point order).
-
-        * Root stage: the prompt is a literal -> mpl is a literal. No
-          Spark job at all (round 1 ran a full scan of docs here).
-        * Child stage: max(prompt) depends only on parent span texts,
-          so it is computed from the (persisted) parent results as a
-          1-row agg cross-joined back as a broadcast — a scalar
-          subquery, so mpl adds no job of its own (a stage's one
-          eager job is the cls probe in _run_stage); round 1's
-          per-stage collect() + examples-subtree recompute (2 extra
-          passes incl. a docs re-join per stage) is gone.
-        """
-        from .core.textnorm import MIN_PREDICT_WINDOW, max_predict_len
-
-        msl = self.config.max_seq_len
-        if parent_results is None:
-            mpl = max_predict_len([dbc2sbc(node.name)], msl)
-            return examples.withColumn("mpl", F.lit(mpl))
-        mpl_df = (
-            parent_results.select(self._child_prompt_col(node).alias("p"))
-            .agg(F.max("p").alias("maxp"))
+        # mpl per node from its own prompts: ONE 1-row aggregate (a max
+        # per node path) over the persisted parent results, broadcast; a
+        # groupBy would sort and shuffle a handful of groups. A node
+        # with no parent spans has no examples.
+        paths = list(dict.fromkeys(c.path for c in level))
+        maxes = [F.max(F.when(F.col("node_path") == p, F.col("prompt"))) for p in paths]
+        max_prompt = spans.agg(
+            F.map_from_arrays(F.array(*map(F.lit, paths)), F.array(*maxes)).alias("max_prompt")
+        )
+        # results deliberately don't carry the text column around: the
+        # parent spans join back to docs to recover it
+        return (
+            spans.join(docs, "doc_id")
+            .crossJoin(F.broadcast(max_prompt))
             .select(
+                "doc_id",
+                F.xxhash64(
+                    F.col("parent_ex"),
+                    F.col("node_path"),
+                    F.col("parent_text"),
+                    F.coalesce(F.col("parent_start"), F.lit(-1)),
+                    F.coalesce(F.col("parent_end"), F.lit(-1)),
+                ).alias("ex_id"),
+                "node_path",
+                "node_name",
+                "prompt",
+                "text",
                 F.greatest(
-                    # empty stage -> maxp NULL -> fall back to msl-3
-                    # BEFORE the greatest (any window works: there are
-                    # no rows to chunk)
-                    F.coalesce(
-                        F.lit(msl) - F.length("maxp") - F.lit(3),
-                        F.lit(msl - 3),
-                    ),
+                    F.lit(self.config.max_seq_len)
+                    - F.length(F.col("max_prompt")[F.col("node_path")])
+                    - 3,
                     F.lit(MIN_PREDICT_WINDOW),
                 )
                 .cast("int")
-                .alias("mpl")
+                .alias("mpl"),
+                *PARENT_COLS,
             )
         )
-        return examples.crossJoin(F.broadcast(mpl_df))
 
     def _chunk(self, examples: DataFrame) -> DataFrame:
         """Native chunk explode. Fixed windows: chunk k covers chars
         [k*mpl, (k+1)*mpl); its char offset is exactly k*mpl
         (uie_predictor.py:364-409, 551-565). Sentence mode replays the
         reference regex chain then windows each sentence; offsets are
-        a running sum of chunk lengths. The window size is the ``mpl``
-        column attached by _with_mpl (literal or broadcast scalar)."""
+        a running sum of chunk lengths. The window size is the
+        examples' per-node ``mpl`` column."""
         mpl = F.col("mpl")
         if not self.config.split_sentence:
             n = F.when(F.length("text") <= mpl, F.lit(1)).otherwise(
@@ -474,7 +472,9 @@ class UIEEngine:
             "pos", F.row_number().over(w2) - 1
         ).drop("sent", "sent_idx", "win_idx")
 
-    def _run_stage(self, node: SchemaNode, examples: DataFrame) -> DataFrame:
+    def _run_stage(self, examples: DataFrame) -> DataFrame:
+        """One level's stage: every node of the level shares its chunk
+        explode, dedup, inference pass, probe and join-back."""
         # (key, key2) is the join identity between owner chunks and
         # decoded records: two independent 64-bit hashes (different
         # field orders -> different byte streams) give ~2^-128 birthday
@@ -527,20 +527,14 @@ class UIEEngine:
         # an empty cls input aggregates to zero rows.
         has_cls = not records.filter(F.col("is_cls")).isEmpty()
 
-        right = (
-            F.broadcast(records)
-            if self.config.join_back_broadcast
-            else records
-        )
+        right = F.broadcast(records) if self.config.join_back_broadcast else records
         joined = chunks.drop("prompt", "chunk_text", "text", "mpl").join(
             right, ["key", "key2"]
         )
 
+        owner = ["doc_id", "ex_id", "node_path", "node_name"]
         span_rows = joined.filter(~F.col("is_cls")).select(
-            "doc_id",
-            "ex_id",
-            F.lit(node.path).alias("node_path"),
-            F.lit(node.name).alias("node_name"),
+            *owner,
             "text",
             (F.col("start") + F.col("chunk_off")).alias("start"),
             (F.col("end") + F.col("chunk_off")).alias("end"),
@@ -548,19 +542,15 @@ class UIEEngine:
             "is_cls",
             *PARENT_COLS,
         )
-
         if not has_cls:
-            return span_rows.select(RESULT_COLS)
+            return span_rows
 
         cls_rows = _cls_vote(
             joined.filter(F.col("is_cls")).select(
-                "doc_id", "ex_id", "pos", "text", "prob", *PARENT_COLS
+                *owner, "pos", "text", "prob", *PARENT_COLS
             )
         ).select(
-            "doc_id",
-            "ex_id",
-            F.lit(node.path).alias("node_path"),
-            F.lit(node.name).alias("node_name"),
+            *owner,
             "text",
             F.lit(None).cast("long").alias("start"),
             F.lit(None).cast("long").alias("end"),
@@ -568,22 +558,26 @@ class UIEEngine:
             F.lit(True).alias("is_cls"),
             *PARENT_COLS,
         )
-        return span_rows.select(RESULT_COLS).unionByName(cls_rows)
+        return span_rows.unionByName(cls_rows)
 
 
 def _cls_vote(answers: DataFrame) -> DataFrame:
     """Classification vote (uie_predictor.py:529-550) in ONE aggregate.
 
-    ``answers``: (doc_id, ex_id, pos, text, prob, parent_*) with at
+    ``answers``: (doc_id, ex_id, pos, text, prob, *owner) with at
     most one answer per chunk ``pos`` (the kernel keeps each chunk's
     first). Per example the winning option is the max by (count, prob
     sum), ties -> earliest chunk; its reported probability is the mean.
-    Returns (doc_id, ex_id, text, prob, parent_*), one row per example.
+    Returns (doc_id, ex_id, text, prob, *owner), one row per example.
 
     The answers are collected sorted by chunk, so every option's sum
     is an in-order fold — bitwise deterministic across partitionings.
-    parent_* are constant per example (ex_id hashes the parent span).
+    The owner columns (node_*, parent_*) are constant per example
+    (ex_id hashes the node path and the parent span).
     """
+    owner = [
+        c for c in answers.columns if c not in ("doc_id", "ex_id", "pos", "text", "prob")
+    ]
     # per distinct option, its answers (still in chunk order)
     groups = F.transform(
         F.array_distinct(F.col("answers.text")),
@@ -610,7 +604,7 @@ def _cls_vote(answers: DataFrame) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("pos", "text", "prob"))).alias(
                 "answers"
             ),
-            *[F.first(c).alias(c) for c in PARENT_COLS],
+            *[F.first(c).alias(c) for c in owner],
         )
         .withColumn("w", winner)
         .select(
@@ -618,6 +612,6 @@ def _cls_vote(answers: DataFrame) -> DataFrame:
             "ex_id",
             F.col("w.text").alias("text"),
             (F.col("w.sum_prob") / F.col("w.cnt")).alias("prob"),
-            *PARENT_COLS,
+            *owner,
         )
     )

@@ -1,6 +1,7 @@
 """Extraction-schema compiler: user schema (str | list | dict, nested)
--> a tree of stage nodes. The schema is the QUERY PLAN of this engine:
-each node compiles to one distributed prompted-scan stage.
+-> a tree of nodes. The schema is the QUERY PLAN of this engine: each
+node is one prompted scan, and the engine runs all nodes of one tree
+level in one distributed stage.
 
 Semantics re-derived from /root/reference/uie_predictor.py:574-622
 (_build_tree) and 243-267 (prompt construction):
