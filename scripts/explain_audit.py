@@ -20,27 +20,6 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
-def _near_dup_edges(D, F, docs):
-    """The exact verified-edge subtree of D.near_dup_canonical (the
-    part before the iterative CC), kept in lockstep with the operator
-    so the audited plan is the shipped plan."""
-    hashed = docs.select(
-        "doc_id",
-        F.col("text"),
-        F.coalesce(
-            F.md5(F.col("text")),
-            F.concat(F.lit("null-"), F.col("doc_id").cast("string")),
-        ).alias("content_hash"),
-    )
-    groups = hashed.groupBy("content_hash").agg(
-        F.min("doc_id").alias("rep_id"), F.first("text").alias("text")
-    )
-    reps = groups.select(F.col("rep_id").alias("doc_id"), "text")
-    sig = D.minhash_sig_array(reps, "text")
-    cands = D.lsh_candidate_pairs(sig, max_bucket_size=D.DEFAULT_MAX_BUCKET_SIZE)
-    return D.jaccard_pairs(reps, threshold=0.5, candidates=cands)
-
-
 def plan_of(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -211,22 +190,26 @@ def main():
          plan_of(D.jaccard_pairs(docs_j, threshold=0.5, candidates=cands)))
     )
 
-    # 8. exact pre-collapse below the near-dup tier: the mirror-cluster
-    # hazard fix. The content-hash HashAggregate must sit BELOW the
-    # shingle explode (Generate) in the candidate branch, so identical
-    # documents are collapsed BEFORE any signature/banding work.
+    # 8. exact pre-collapse below the near-dup tier (the mirror-cluster
+    # hazard fix), as near_dup_canonical runs it: the content-hash
+    # groups checkpoint, then D.near_dup_edges over that checkpoint.
+    _, groups = D.content_groups(docs_j)
+    groups_tree = tree_of(groups)  # as planned, before the checkpoint runs it
+    reps = groups.localCheckpoint(eager=True).select(
+        F.col("rep_id").alias("doc_id"), "text"
+    )
     sections.append(
-        ("near_dup_canonical candidate branch (exact pre-collapse below the shingle explode)",
-         "Expect: a HashAggregate keyed by content_hash = md5(text) "
-         "(min(doc_id) representative) UNDER the Generate(explode) that "
-         "produces shingles — a mirror cluster of m identical docs "
-         "reaches MinHash/LSH as ONE row, so band buckets cannot go "
-         "quadratic in m. The final fan-out is an equi-join back on "
-         "content_hash. (Plan taken from near_dup_canonical's own "
-         "verified-edge subtree — the CC loop that consumes it is "
-         "iterative with lineage cuts, so the edge pipeline is the "
-         "auditable part.)",
-         plan_of(_near_dup_edges(D, F, docs_j)))
+        ("near_dup_canonical candidate branch (exact pre-collapse, then the edge step over its checkpoint)",
+         "Expect: the groups checkpoint's plan is one partial/final "
+         "aggregate pair keyed by content_hash = md5(text) (min(doc_id) "
+         "representative, first(text)); the edge step (MinHash, LSH banded equi-join, "
+         "Jaccard on shingle arrays) reads that checkpoint as an "
+         "ExistingRDD leaf under the Generate(explode) of shingles — a "
+         "mirror cluster of m identical docs reaches MinHash/LSH as ONE "
+         "row. The iterative CC and the content_hash fan-out join are "
+         "not shown. Operator trees only (tree_of).",
+         groups_tree + "\n-- verified edges over the groups checkpoint --\n"
+         + tree_of(D.near_dup_edges(reps, 0.5, max_bucket_size=D.DEFAULT_MAX_BUCKET_SIZE)))
     )
 
     # 9. range join: the bucketed rewrite must be an equi-join, not

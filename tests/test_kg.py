@@ -210,6 +210,18 @@ def test_canonicalize_mentions_near_dupes(spark):
     assert by_mention[5] not in (by_mention[1], by_mention[3])
 
 
+def test_canonicalize_mentions_leaves_no_cache(spark):
+    """Without an owner, canonicalization materializes only through
+    localCheckpoints, which the CacheManager never holds."""
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(
+        [(1, "acme corporation"), (2, "ＡＣＭＥ Corporation"), (3, "other inc")],
+        "mention_id: long, surface: string",
+    )
+    assert C.canonicalize_mentions(df).count() == 3
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_entity_degrees_hand_graph(spark):
     """Hand-computable degree profile incl. a dual-role node and a
     self-loop: a->b, a->c (pred p), b->a (pred q), d->d (self)."""

@@ -4,6 +4,7 @@ behaviors not covered by the oracle harness."""
 from __future__ import annotations
 
 import json
+from contextlib import ExitStack
 
 import pytest
 from pyspark.sql import functions as F
@@ -192,8 +193,11 @@ def test_near_dup_canonical_mirror_cluster_precollapse(spark):
     cands = D.lsh_candidate_pairs(D.minhash_sig_array(reps)).collect()
     assert len(cands) == 1 and (cands[0]["doc_a"], cands[0]["doc_b"]) == (0, 2000)
 
-    out = {r["doc_id"]: r["canonical_doc_id"]
-           for r in D.near_dup_canonical(docs, threshold=0.5).collect()}
+    res = D.near_dup_canonical(docs, threshold=0.5)
+    assert res.columns == ["doc_id", "text", "canonical_doc_id"]
+    got = res.collect()
+    assert sorted((r["doc_id"], r["text"]) for r in got) == sorted(rows)
+    out = {r["doc_id"]: r["canonical_doc_id"] for r in got}
     assert len(out) == 1002
     for i in range(1000):
         assert out[i] == 0          # every mirror copy -> min doc id
@@ -210,13 +214,14 @@ def test_near_dup_canonical_bucket_cap_equivalence(spark):
     identical output, 99 s -> 18 s (cap=16)."""
     docs = (
         spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-        .select("doc_id", "text")
+        .select("doc_id", "lang", "text")
         .filter(F.col("doc_id") < 250)
     )
-    full = {
-        r["doc_id"]: r["canonical_doc_id"]
-        for r in D.near_dup_canonical(docs, threshold=0.5).collect()
-    }
+    res = D.near_dup_canonical(docs, threshold=0.5)
+    assert res.columns == ["doc_id", "lang", "text", "canonical_doc_id"]
+    assert res.drop("canonical_doc_id").exceptAll(docs).isEmpty()
+    full = {r["doc_id"]: r["canonical_doc_id"] for r in res.collect()}
+    assert len(full) == 250
     capped = {
         r["doc_id"]: r["canonical_doc_id"]
         for r in D.near_dup_canonical(
@@ -475,15 +480,38 @@ def test_near_dup_canonical_null_text_self_maps(spark):
     """NULL-text docs must each map to THEMSELVES: md5(NULL) is NULL
     for every such row, so a naive content-hash key would collapse all
     null-text docs into one bogus cluster."""
-    rows = [(1, "identical page body"), (2, "identical page body"),
-            (10, None), (11, None), (12, None)]
-    docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-    out = {
-        r["doc_id"]: r["canonical_doc_id"]
-        for r in D.near_dup_canonical(docs, threshold=0.5).collect()
-    }
+    rows = [(1, "identical page body", "a"), (2, "identical page body", "b"),
+            (10, None, "c"), (11, None, "d"), (12, None, "e")]
+    docs = spark.createDataFrame(rows, "doc_id: long, text: string, url: string")
+    got = D.near_dup_canonical(docs, threshold=0.5).collect()
+    # every input row comes back whole, canonical_doc_id appended
+    assert sorted(tuple(r)[:3] for r in got) == rows
+    assert all(len(r) == 4 for r in got)
+    out = {r["doc_id"]: r["canonical_doc_id"] for r in got}
     assert out[1] == 1 and out[2] == 1       # exact dups collapse
     assert out[10] == 10 and out[11] == 11 and out[12] == 12
+
+
+def test_near_dup_canonical_releases_its_checkpoints(spark):
+    """The content groups and connected_components' last round are the
+    two checkpoints the result reads; both are released when ``held``
+    is closed."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    body = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, body), (2, body), (3, body + " again"), (4, "unrelated page")],
+        "doc_id: long, text: string",
+    )
+    before = persisted()
+    with ExitStack() as held:
+        res = D.near_dup_canonical(docs, threshold=0.5, held=held)
+        assert len(persisted() - before) == 2
+        assert {r["doc_id"]: r["canonical_doc_id"] for r in res.collect()} == {
+            1: 1, 2: 1, 3: 1, 4: 4,
+        }
+    assert persisted() <= before
 
 
 def test_lsh_bucket_cap_observation_reports_drops(spark):

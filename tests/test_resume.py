@@ -187,3 +187,50 @@ def test_cli_backfill_holds_one_buckets_caches(spark, tmp_path, monkeypatch):
         # nothing an earlier bucket cached is still held at this commit
         assert commit - starts[0] <= bucket
     assert not persisted() & set().union(*buckets)
+
+
+def test_corrupt_lineage_fails_the_run(spark, tmp_path):
+    """A lineage table that exists but cannot be read must not read as
+    "nothing done": resuming would re-extract every bucket and append
+    to a table nobody can read."""
+    run = CheckpointedRun(spark, str(tmp_path), run_id="r1", buckets=2)
+    os.makedirs(run.lineage_path)
+    with open(os.path.join(run.lineage_path, "part-0.parquet"), "w") as f:
+        f.write("not parquet")
+    pages = fixture_web_pages(spark, n_docs=4, seed=9)
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        run.run(pages, lambda part: part.select("url"))
+    assert not os.path.exists(run.triples_path)
+
+
+def test_cli_reads_iceberg_input_through_web_pages_seam(
+    spark, tmp_path, monkeypatch
+):
+    """``--input iceberg:<db.table>`` loads through the Iceberg
+    DataSource, and the byte-identical-text check runs on what it
+    loads. No Iceberg runtime is on the classpath here, so the reader
+    is stubbed to return pages whose text is not their html body."""
+    from pyspark.sql import DataFrameReader
+
+    bad = fixture_web_pages(spark, n_docs=4, seed=9).withColumn(
+        "text", F.concat("text", F.lit("!"))
+    )
+    calls = []
+
+    def fmt(self, source):
+        calls.append(source)
+        return self
+
+    def load(self, path=None, *args, **kwargs):
+        calls.append(path)
+        return bad
+
+    monkeypatch.setattr(DataFrameReader, "format", fmt)
+    monkeypatch.setattr(DataFrameReader, "load", load)
+    with pytest.raises(SystemExit) as exit_:
+        cli.main([
+            "--input", "iceberg:db.t", "--output", str(tmp_path / "out"),
+            "--schema", json.dumps({"竞赛名称": ["主办方"]}, ensure_ascii=False),
+        ])
+    assert exit_.value.code == 2
+    assert calls == ["iceberg", "db.t"]

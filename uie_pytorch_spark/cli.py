@@ -32,7 +32,7 @@ import sys
 
 def main(argv=None):
     ap = argparse.ArgumentParser(description="UIE-Spark KG construction")
-    ap.add_argument("--input", required=True, help="web_pages parquet/iceberg path")
+    ap.add_argument("--input", required=True, help="web_pages parquet path or iceberg:<db.table>")
     ap.add_argument("--output", required=True, help="output directory")
     ap.add_argument("--schema", required=True, help="extraction schema JSON")
     ap.add_argument("--run-id", default="run-0")
@@ -40,7 +40,6 @@ def main(argv=None):
     ap.add_argument("--lang", default="zh")
     ap.add_argument("--position-prob", type=float, default=0.5)
     ap.add_argument("--max-seq-len", type=int, default=512)
-    ap.add_argument("--skip-invariant-check", action="store_true")
     # deployment seams: a real checkpoint/vocab ships with --files (or
     # sc.addFile below when the path is driver-local) and slots in here
     # with no code changes
@@ -69,20 +68,19 @@ def main(argv=None):
     from uie_pytorch_spark.engine import UIEConfig, UIEEngine
     from uie_pytorch_spark.kg.canonicalize import canonicalize_mentions
     from uie_pytorch_spark.kg.lineage import CheckpointedRun
-    from uie_pytorch_spark.sources.web_pages import extract_text
+    from uie_pytorch_spark.sources import web_pages
 
-    pages = spark.read.parquet(args.input)
+    pages = web_pages.read_web_pages(spark, args.input)
 
-    if not args.skip_invariant_check:
-        bad = (
-            extract_text(pages)
-            .filter(F.col("extracted") != F.col("text"))
-            .limit(1)
-            .count()
-        )
-        if bad:
-            print("FATAL: text-extraction invariant violated", file=sys.stderr)
-            sys.exit(2)
+    bad = (
+        web_pages.extract_text(pages)
+        .filter(F.col("extracted") != F.col("text"))
+        .limit(1)
+        .count()
+    )
+    if bad:
+        print("FATAL: text-extraction invariant violated", file=sys.stderr)
+        sys.exit(2)
 
     schema = json.loads(args.schema)
     # ship driver-local artifacts so executor workers can resolve them
@@ -109,7 +107,7 @@ def main(argv=None):
     def extract_fn(part_pages):
         # the previous bucket is committed by now: release its caches
         eng.unpersist()
-        docs = part_pages.select(F.xxhash64("url").alias("doc_id"), "text")
+        docs = web_pages.docs_view(part_pages).select("doc_id", "text")
         return UIEEngine.triples(eng.extract(docs))
 
     run = CheckpointedRun(

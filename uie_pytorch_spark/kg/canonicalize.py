@@ -2,20 +2,22 @@
 extracted entities to canonical ids.
 
 Three steps (canonicalize_mentions):
-  1. normalize: lower/trim/whitespace-collapse + full-width fold, then
-     one ``distinct`` over the normalized surfaces;
-  2. near-match: MinHash LSH over char shingles of the normalized
-     surface (operators/dedup.py) -> candidate pairs with Jaccard
-     verify;
-  3. transitive closure: connected components over the verified-pair
-     graph via small-star/large-star label propagation, one aggregate
-     per round (Kiveris et al., "Connected Components in MapReduce and
-     Beyond", SOCC'14) — pyspark-only, no GraphFrames dependency,
-     converges in O(log n) rounds for web-ish graphs.
+  1. normalize: lower/trim/whitespace-collapse + full-width fold;
+  2. near_dup_canonical (operators/dedup.py), the one composition of
+     the near-duplicate tier: one content-hash group per normalized
+     surface, MinHash LSH over its char shingles -> candidate pairs
+     with Jaccard verify, then the transitive closure below;
+  3. project the canonical id back onto each mention.
+
+The transitive closure is connected_components: small-star/large-star
+label propagation over the verified-pair graph, one aggregate per
+round (Kiveris et al., "Connected Components in MapReduce and Beyond",
+SOCC'14) — pyspark-only, no GraphFrames dependency, converges in
+O(log n) rounds for web-ish graphs.
 
 Skew: hot surface forms (boilerplate entities like "北京") concentrate
-on few keys; the ``distinct`` is map-side combined, so a hot surface
-reaches its reducer as one row per map task.
+on few keys; near_dup_canonical's content-hash groupBy is map-side
+combined, so a hot surface reaches its reducer as one row per map task.
 """
 
 from __future__ import annotations
@@ -34,25 +36,6 @@ def normalize_surface(col):
     # U+3000 for reference parity; canonicalization wants it folded)
     c = F.translate(col, DBC_FROM + "　", DBC_TO + " ")
     return F.trim(F.regexp_replace(F.lower(c), r"(?U)\s+", " "))
-
-
-def near_match_edges(
-    surfaces: DataFrame, jaccard_threshold: float = 0.6, shingle: int = 3
-) -> DataFrame:
-    """surfaces(sid, surface_norm) -> verified near-duplicate edges
-    (src, dst): MinHash LSH candidates filtered by exact n-gram
-    Jaccard. At scale the Jaccard verify runs ONLY on LSH candidates."""
-    docs = surfaces.select(
-        F.col("sid").alias("doc_id"), F.col("surface_norm").alias("text")
-    )
-    sig = D.minhash_sig_array(docs, width=shingle)
-    cands = D.lsh_candidate_pairs(sig)
-    verified = D.jaccard_pairs(
-        docs, threshold=jaccard_threshold, width=shingle, candidates=cands
-    )
-    return verified.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
 
 
 def _ckpt_with_signature(df: DataFrame):
@@ -175,33 +158,30 @@ def canonicalize_mentions(
     held: ExitStack | None = None,
 ) -> DataFrame:
     """Full pipeline: mentions(mention_id, surface) ->
-    (mention_id, surface, surface_norm, canonical_surface_id) where
+    (surface_norm, mention_id, surface, canonical_surface_id) where
     near-duplicate normalized surfaces share one canonical id.
 
-    The returned plan reads three caches: the normalized mentions, the
-    distinct surfaces and connected_components' last checkpoint. When
-    ``held`` is given they are registered on it, and the caller closes
-    it once the result is consumed (written or collected)."""
+    Every mention of one normalized surface gets doc_id =
+    xxhash64(surface_norm), the id of its content group. The normalized
+    mentions are one eager localCheckpoint; it and near_dup_canonical's
+    checkpoints are registered on ``held`` when given, for the caller
+    to close once the result is consumed (see near_dup_canonical)."""
     m = mentions.select(
         "mention_id",
         "surface",
         normalize_surface(F.col("surface")).alias("surface_norm"),
-    ).persist()
-    surfaces = (
-        m.select("surface_norm")
-        .distinct()
-        .withColumn("sid", F.xxhash64("surface_norm"))
-        .persist()
-    )
+    ).localCheckpoint(eager=True)
     if held is not None:
-        held.callback(m.unpersist)
-        held.callback(surfaces.unpersist)
-    edges = near_match_edges(surfaces, jaccard_threshold)
-    comps = connected_components(edges, held=held)
-    canon = surfaces.join(
-        comps, surfaces.sid == comps.id, "left"
-    ).select(
-        "surface_norm",
-        F.coalesce(F.col("component"), F.col("sid")).alias("canonical_surface_id"),
+        held.callback(_drop_checkpoint, m)
+    canon = D.near_dup_canonical(
+        m.withColumn("doc_id", F.xxhash64("surface_norm")),
+        jaccard_threshold,
+        text_col="surface_norm",
+        width=3,
+        max_bucket_size=None,
+        held=held,
     )
-    return m.join(canon, "surface_norm")
+    return canon.select(
+        "surface_norm", "mention_id", "surface",
+        F.col("canonical_doc_id").alias("canonical_surface_id"),
+    )

@@ -3,9 +3,10 @@
 mention-level triple table onto canonical entity ids and aggregate one
 row per (subj_id, pred, obj_id) graph edge.
 
-The canonical map is whatever canonicalization produced it — the
-normalize + MinHash-LSH + connected-components pipeline
-(canonicalize.canonicalize_mentions) in the CLI — this module only
+The canonical map is whatever canonicalization produced it — in the
+CLI, canonicalize.canonicalize_mentions: normalize, then
+operators.dedup.near_dup_canonical (content-hash groups, MinHash-LSH,
+connected components) over the normalized surfaces — this module only
 requires (surface, canonical_id) rows, one per distinct surface.
 
 Scale shape: two keyed equi-joins (surface -> id on each endpoint; the

@@ -73,7 +73,10 @@ class CheckpointedRun:
     def completed_partitions(self) -> List[int]:
         try:
             lin = self.spark.read.parquet(self.lineage_path)
-        except Exception:
+        except AnalysisException as e:
+            # no lineage yet; an unreadable one must not read as "nothing done"
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return []
         rows = (
             lin.filter(

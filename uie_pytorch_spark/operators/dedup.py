@@ -9,8 +9,11 @@ Scale design:
     partial-aggregatable groupBy producing an ARRAY signature;
     banding is a native projection of the array; candidate search is
     an equi-join on (band_id, band_hash) instead of O(n^2) pairs.
-  * near_dup_canonical collapses EXACT duplicates (content hash)
-    BEFORE the near-dup tier — mirror clusters (the dominant web-scale
+  * near_dup_canonical is the one composition of the near-dup tier
+    (kg/canonicalize runs it over normalized surfaces). It collapses
+    EXACT duplicates (content hash) BEFORE the tier, as one eager
+    checkpoint that near_dup_edges (MinHash -> LSH -> Jaccard) and
+    the fan-out read — mirror clusters (the dominant web-scale
     duplication) cost O(1) there instead of O(m^2) bucket pairs; a
     bucket-size cap backstops near-identical boilerplate families.
   * pairwise Jaccard runs ONLY on LSH candidates at scale; the
@@ -22,6 +25,8 @@ Oracle-compatible hashing throughout (md5-derived h60; see hashing.py).
 """
 
 from __future__ import annotations
+
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -275,23 +280,59 @@ def jaccard_pairs(
     )
 
 
+def near_dup_edges(
+    docs: DataFrame,
+    threshold: float = 0.5,
+    text_col: str = "text",
+    width: int = DEFAULT_SHINGLE,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """docs(doc_id, text_col) -> verified near-duplicate edges (src,
+    dst): MinHash -> LSH candidates -> Jaccard on the candidates ONLY."""
+    sig = minhash_sig_array(docs, text_col, width=width)
+    cands = lsh_candidate_pairs(sig, max_bucket_size=max_bucket_size)
+    return jaccard_pairs(
+        docs, threshold=threshold, text_col=text_col, width=width,
+        candidates=cands,
+    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+
+
+def content_groups(docs: DataFrame, text_col: str = "text"):
+    """(hashed, groups): ``docs`` + ``content_hash``, and one row per
+    distinct content (content_hash, rep_id = min doc_id, text).
+    NULL text must NOT collapse: md5(NULL) is NULL for every such row,
+    so it is keyed on a per-doc sentinel and each maps to itself."""
+    hashed = docs.withColumn(
+        "content_hash",
+        F.coalesce(
+            F.md5(F.col(text_col)),
+            F.concat(F.lit("null-"), F.col("doc_id").cast("string")),
+        ),
+    )
+    # F.first is deterministic: every text in a group is identical
+    groups = hashed.groupBy("content_hash").agg(
+        F.min("doc_id").alias("rep_id"), F.first(text_col).alias("text")
+    )
+    return hashed, groups
+
+
 def near_dup_canonical(
     docs: DataFrame,
     threshold: float = 0.5,
     text_col: str = "text",
     width: int = DEFAULT_SHINGLE,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    observation=None,
+    held: ExitStack | None = None,
 ) -> DataFrame:
     """End-to-end near-duplicate document canonicalization — the
     corpus-dedup composition a web-text pipeline runs before training:
-    EXACT pre-collapse (content hash) -> MinHash -> LSH banding
-    (candidates) -> exact Jaccard verify (on candidates ONLY) ->
-    connected components over verified edges -> fan the canonical id
-    back out through the exact-dup map. Returns (doc_id,
-    canonical_doc_id = min doc id of the duplicate cluster; docs in no
-    cluster map to themselves). Keeping `WHERE doc_id =
-    canonical_doc_id` yields the deduplicated corpus.
+    EXACT pre-collapse (content hash) -> near_dup_edges (MinHash -> LSH
+    banding -> exact Jaccard verify on candidates ONLY) -> connected
+    components over verified edges -> fan the canonical id back out
+    through the exact-dup map. Returns the rows of ``docs`` with
+    ``canonical_doc_id`` appended (min doc id of the duplicate
+    cluster; docs in no cluster map to themselves). Keeping `WHERE
+    doc_id = canonical_doc_id` yields the deduplicated corpus.
 
     The pre-collapse is the web-scale load-bearer: identical documents
     have identical signatures, so a mirror cluster of m copies would
@@ -305,48 +346,30 @@ def near_dup_canonical(
     min-rep of a merged component equals the min doc id of the full
     cluster because each rep is already its content group's min.
 
-    Scale shape: every step is the audited scale path (one content-hash
-    groupBy, banded equi-join, candidate-only Jaccard on shingle arrays,
-    small/large-star CC at one aggregate per round with per-round
-    lineage cuts); no all-pairs work
-    anywhere. ``max_bucket_size`` additionally caps LSH band buckets
-    (see lsh_candidate_pairs) as the backstop for near-identical — not
-    identical — boilerplate families; it defaults ON
-    (DEFAULT_MAX_BUCKET_SIZE — the 100 TB posture; pass None for
-    complete generation), and passing an ``observation`` records how
-    many buckets/rows the cap dropped in the consuming action."""
-    from ..kg.canonicalize import connected_components  # local: avoids cycle
+    Scale shape: no all-pairs work anywhere. ``max_bucket_size`` caps
+    LSH band buckets (see lsh_candidate_pairs) as the backstop for
+    near-identical — not identical — boilerplate families; it defaults
+    ON (the 100 TB posture; pass None for complete generation).
 
-    # NULL text must NOT collapse: md5(NULL) is NULL for every such
-    # row, so a plain hash key would merge all null-text docs into one
-    # "cluster". Key them on a per-doc sentinel instead — each maps to
-    # itself (null shingles drop them from signatures anyway).
-    hashed = docs.select(
-        "doc_id",
-        F.col(text_col).alias("text"),
-        F.coalesce(
-            F.md5(F.col(text_col)),
-            F.concat(F.lit("null-"), F.col("doc_id").cast("string")),
-        ).alias("content_hash"),
-    )
-    # one representative (min doc_id) per distinct content; F.first on
-    # text is deterministic here — every text in the group is identical
-    groups = hashed.groupBy("content_hash").agg(
-        F.min("doc_id").alias("rep_id"), F.first("text").alias("text")
-    )
+    Materialization: the content groups are ONE eager localCheckpoint
+    that MinHash, LSH, Jaccard and the fan-out all read; CC keeps its
+    last round the same way; nothing enters the CacheManager. With
+    ``held``, both are registered on it for the caller to close once
+    the result is consumed; without, the ContextCleaner frees them once
+    the result is unreachable. A checkpoint is lost with its executor,
+    so such a loss fails the job fast (as the CC rounds always have)."""
+    from ..kg.canonicalize import _drop_checkpoint, connected_components  # local: avoids cycle
+
+    hashed, groups = content_groups(docs, text_col)
+    groups = groups.localCheckpoint(eager=True)
+    if held is not None:
+        held.callback(_drop_checkpoint, groups)
     reps = groups.select(F.col("rep_id").alias("doc_id"), "text")
-
-    sig = minhash_sig_array(reps, "text", width=width)
-    cands = lsh_candidate_pairs(
-        sig, max_bucket_size=max_bucket_size, observation=observation
+    comps = connected_components(
+        near_dup_edges(reps, threshold, width=width, max_bucket_size=max_bucket_size),
+        held=held,
     )
-    verified = jaccard_pairs(
-        reps, threshold=threshold, text_col="text", width=width,
-        candidates=cands,
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    comps = connected_components(verified)
-
-    rep_canon = groups.select("content_hash", "rep_id").join(
+    rep_canon = groups.join(
         comps, F.col("rep_id") == comps["id"], "left"
     ).select(
         "content_hash",
@@ -354,9 +377,7 @@ def near_dup_canonical(
             "canonical_doc_id"
         ),
     )
-    return hashed.select("doc_id", "content_hash").join(
-        rep_canon, "content_hash"
-    ).select("doc_id", "canonical_doc_id")
+    return hashed.join(rep_canon, "content_hash").drop("content_hash")
 
 
 def simhash(docs: DataFrame, text_col: str = "text", bits: int = 60) -> DataFrame:

@@ -695,7 +695,9 @@ def dedup_near_canonical(spark, sf_dir):
     default band-bucket cap and the rep-level pre-collapse — with the
     CC as a recursive label-propagation CTE; the transitive closure is
     live-SQL-checked, not frozen."""
-    return D.near_dup_canonical(_t(spark, sf_dir, "documents"), threshold=0.5)
+    return D.near_dup_canonical(
+        _t(spark, sf_dir, "documents"), threshold=0.5
+    ).select("doc_id", "canonical_doc_id")
 
 
 # a 13-member near-identical (but not exact) family: the fixture's
@@ -738,7 +740,7 @@ def dedup_near_canonical_capped(spark, sf_dir):
     )
     return D.near_dup_canonical(
         base.unionByName(variants), threshold=0.5, max_bucket_size=8
-    )
+    ).select("doc_id", "canonical_doc_id")
 
 
 @query(

@@ -40,10 +40,6 @@ class SchemaNode:
             node = node.parent
         return "/".join(reversed(parts))
 
-    @property
-    def is_classification(self) -> bool:
-        return _CLS_RE.search(self.name) is not None
-
     def en_prompt_parts(self):
         """For English cls nodes 'Label of X [a, b]' the option suffix
         is spliced after the parent text (uie_predictor.py:250-256).

@@ -24,14 +24,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    # thread pins + deterministic OpenBLAS kernel family, set BEFORE
-    # the JVM launches so python worker daemons inherit them (the
-    # engine additionally injects the same vars into sc.environment
-    # for sessions built elsewhere).
-    from .core import blas_env_vars
-
-    for var, val in blas_env_vars().items():
-        os.environ.setdefault(var, val)
+    # importing .core sets the BLAS thread pins and OpenBLAS kernel
+    # family in os.environ BEFORE the JVM launches, so Python worker
+    # daemons inherit them.
+    from . import core  # noqa: F401
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
