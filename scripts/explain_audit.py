@@ -191,12 +191,12 @@ def main():
     )
 
     # 8. exact pre-collapse below the near-dup tier (the mirror-cluster
-    # hazard fix), as near_dup_canonical runs it: the content-hash
-    # groups checkpoint, then D.near_dup_edges over that checkpoint.
+    # hazard fix): the two calls near_dup_canonical makes before CC, at
+    # its default threshold, width and bucket cap.
     _, groups = D.content_groups(docs_j)
     groups_tree = tree_of(groups)  # as planned, before the checkpoint runs it
-    reps = groups.localCheckpoint(eager=True).select(
-        F.col("rep_id").alias("doc_id"), "text"
+    _, edges = D.near_dup_edges(
+        groups, 0.5, D.DEFAULT_SHINGLE, D.DEFAULT_MAX_BUCKET_SIZE
     )
     sections.append(
         ("near_dup_canonical candidate branch (exact pre-collapse, then the edge step over its checkpoint)",
@@ -209,7 +209,7 @@ def main():
          "row. The iterative CC and the content_hash fan-out join are "
          "not shown. Operator trees only (tree_of).",
          groups_tree + "\n-- verified edges over the groups checkpoint --\n"
-         + tree_of(D.near_dup_edges(reps, 0.5, max_bucket_size=D.DEFAULT_MAX_BUCKET_SIZE)))
+         + tree_of(edges))
     )
 
     # 9. range join: the bucketed rewrite must be an equi-join, not

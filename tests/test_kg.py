@@ -7,6 +7,7 @@ from contextlib import ExitStack
 from pyspark.sql import functions as F
 
 from uie_pytorch_spark.kg import canonicalize as C
+from uie_pytorch_spark.operators import dedup as D
 
 
 def test_normalize_surface(spark):
@@ -31,7 +32,7 @@ def test_connected_components_basic(spark):
         [(1, 2), (2, 3), (10, 11), (12, 11), (20, 21), (21, 20)],
         "src: long, dst: long",
     )
-    comp = {r["id"]: r["component"] for r in C.connected_components(edges).collect()}
+    comp = {r["id"]: r["component"] for r in D.connected_components(edges).collect()}
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[10] == comp[11] == comp[12] == 10
     assert comp[20] == comp[21] == 20
@@ -45,7 +46,7 @@ def test_connected_components_chain(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 100 + n)], "src: long, dst: long"
     )
-    comp = {r["id"]: r["component"] for r in C.connected_components(edges).collect()}
+    comp = {r["id"]: r["component"] for r in D.connected_components(edges).collect()}
     assert set(comp.values()) == {100}
     assert len(comp) == n + 1
 
@@ -63,30 +64,30 @@ def test_connected_components_empty_selfloop_converged(spark):
     labels every node, each with a node of its own component (node 2
     only ever appears as the smaller end of its edges)."""
     empty = spark.createDataFrame([], "src: long, dst: long")
-    assert C.connected_components(empty).count() == 0
-    assert [f.name for f in C.connected_components(empty).schema] == [
+    assert D.connected_components(empty).count() == 0
+    assert [f.name for f in D.connected_components(empty).schema] == [
         "id", "component",
     ]
     # the empty result is built on the JVM, not from a Python RDD
-    plan = C.connected_components(empty)._jdf.queryExecution().toString()
+    plan = D.connected_components(empty)._jdf.queryExecution().toString()
     assert "ExistingRDD" not in plan
 
     loops = spark.createDataFrame([(5, 5), (7, 7)], "src: long, dst: long")
-    assert C.connected_components(loops).count() == 0
+    assert D.connected_components(loops).count() == 0
 
     star = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], "src: long, dst: long"
     )
     comp = {
         r["id"]: r["component"]
-        for r in C.connected_components(star, max_iterations=1).collect()
+        for r in D.connected_components(star, max_iterations=1).collect()
     }
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1}
 
     path = spark.createDataFrame(
         [(3, 1), (2, 4), (3, 4)], "src: long, dst: long"
     )
-    rows = C.connected_components(path, max_iterations=1).collect()
+    rows = D.connected_components(path, max_iterations=1).collect()
     comp = {r["id"]: r["component"] for r in rows}
     assert len(rows) == 4 and set(comp) == {1, 2, 3, 4}
     assert set(comp.values()) <= {1, 2, 3, 4}
@@ -104,7 +105,7 @@ def test_connected_components_releases_superseded_checkpoints(spark):
     )
     before = persisted()
     with ExitStack() as held:
-        comps = C.connected_components(edges, held=held)
+        comps = D.connected_components(edges, held=held)
         assert len(persisted() - before) == 1
         assert {r["component"] for r in comps.collect()} == {0}
     assert not persisted() - before
@@ -151,7 +152,7 @@ def test_connected_components_large_mixed_graph(spark):
     df = spark.createDataFrame(edges, "src: long, dst: long")
     got = {
         r["id"]: r["component"]
-        for r in C.connected_components(df, max_iterations=20).collect()
+        for r in D.connected_components(df, max_iterations=20).collect()
     }
     assert got == want
     # sanity on the interesting structures

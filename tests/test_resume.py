@@ -198,9 +198,27 @@ def test_corrupt_lineage_fails_the_run(spark, tmp_path):
     with open(os.path.join(run.lineage_path, "part-0.parquet"), "w") as f:
         f.write("not parquet")
     pages = fixture_web_pages(spark, n_docs=4, seed=9)
-    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
         run.run(pages, lambda part: part.select("url"))
     assert not os.path.exists(run.triples_path)
+
+
+def test_resume_after_crashed_first_lineage_commit(spark, tmp_path, clean_run):
+    """A crash inside the first lineage append leaves ``lineage/``
+    holding only the committer's hidden ``_temporary/``: that reads as
+    nothing done, and the resumed run completes every bucket."""
+    run = CheckpointedRun(spark, str(tmp_path), run_id="r1", buckets=4)
+    attempt = os.path.join(
+        run.lineage_path, "_temporary", "0", "_temporary", "attempt_0"
+    )
+    os.makedirs(attempt)
+    with open(os.path.join(attempt, "part-00000.parquet"), "w") as f:
+        f.write("half a file")
+    assert run.completed_partitions() == []
+
+    pages = fixture_web_pages(spark, n_docs=24, seed=9)
+    assert _triples_set(run.run(pages, _extract_fn(spark))) == clean_run[0]
+    assert run.completed_partitions() == [0, 1, 2, 3]
 
 
 def test_cli_reads_iceberg_input_through_web_pages_seam(

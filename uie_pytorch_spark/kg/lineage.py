@@ -71,8 +71,10 @@ class CheckpointedRun:
         return os.path.join(self.out_dir, "triples")
 
     def completed_partitions(self) -> List[int]:
+        # schema given, not inferred: a crashed first commit's leftover
+        # _temporary/ then reads as no rows
         try:
-            lin = self.spark.read.parquet(self.lineage_path)
+            lin = self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
         except AnalysisException as e:
             # no lineage yet; an unreadable one must not read as "nothing done"
             if e.getCondition() != "PATH_NOT_FOUND":

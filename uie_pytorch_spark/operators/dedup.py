@@ -11,13 +11,21 @@ Scale design:
     an equi-join on (band_id, band_hash) instead of O(n^2) pairs.
   * near_dup_canonical is the one composition of the near-dup tier
     (kg/canonicalize runs it over normalized surfaces). It collapses
-    EXACT duplicates (content hash) BEFORE the tier, as one eager
-    checkpoint that near_dup_edges (MinHash -> LSH -> Jaccard) and
-    the fan-out read — mirror clusters (the dominant web-scale
-    duplication) cost O(1) there instead of O(m^2) bucket pairs; a
-    bucket-size cap backstops near-identical boilerplate families.
+    EXACT duplicates (content hash) BEFORE the tier, as the one eager
+    checkpoint near_dup_edges takes; its MinHash -> LSH -> Jaccard and
+    the fan-out read that checkpoint — mirror clusters (the dominant
+    web-scale duplication) cost O(1) there instead of O(m^2) bucket
+    pairs; a bucket-size cap backstops near-identical boilerplate
+    families.
   * pairwise Jaccard runs ONLY on LSH candidates at scale; the
     all-pairs variant here is for oracle verification at test SF.
+  * connected_components is the tier's transitive closure:
+    small-star/large-star label propagation over the verified-pair
+    graph, one aggregate per round (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SOCC'14) — pyspark-only, no
+    GraphFrames dependency, O(log n) rounds for web-ish graphs. Every
+    intermediate the tier keeps is an eager localCheckpoint, released
+    by drop_checkpoint.
   * skew: boilerplate shingles hash-bucket evenly by construction
     (keys are hashes); hot bands are handled by AQE skew-join.
 
@@ -280,23 +288,6 @@ def jaccard_pairs(
     )
 
 
-def near_dup_edges(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    width: int = DEFAULT_SHINGLE,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """docs(doc_id, text_col) -> verified near-duplicate edges (src,
-    dst): MinHash -> LSH candidates -> Jaccard on the candidates ONLY."""
-    sig = minhash_sig_array(docs, text_col, width=width)
-    cands = lsh_candidate_pairs(sig, max_bucket_size=max_bucket_size)
-    return jaccard_pairs(
-        docs, threshold=threshold, text_col=text_col, width=width,
-        candidates=cands,
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-
-
 def content_groups(docs: DataFrame, text_col: str = "text"):
     """(hashed, groups): ``docs`` + ``content_hash``, and one row per
     distinct content (content_hash, rep_id = min doc_id, text).
@@ -314,6 +305,139 @@ def content_groups(docs: DataFrame, text_col: str = "text"):
         F.min("doc_id").alias("rep_id"), F.first(text_col).alias("text")
     )
     return hashed, groups
+
+
+def near_dup_edges(
+    groups: DataFrame, threshold: float, width: int, max_bucket_size: int | None
+):
+    """Content groups (content_hash, rep_id, text; see content_groups)
+    -> (checkpoint, edges): ``groups`` as one eager localCheckpoint,
+    and the verified near-duplicate edges (src, dst) between its rep
+    ids — MinHash -> LSH candidates -> Jaccard on the candidates ONLY,
+    all three reading that checkpoint. The caller owns the checkpoint
+    (drop_checkpoint)."""
+    groups = groups.localCheckpoint(eager=True)
+    reps = groups.select(F.col("rep_id").alias("doc_id"), "text")
+    sig = minhash_sig_array(reps, width=width)
+    cands = lsh_candidate_pairs(sig, max_bucket_size=max_bucket_size)
+    edges = jaccard_pairs(
+        reps, threshold=threshold, width=width, candidates=cands
+    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    return groups, edges
+
+
+def _ckpt_with_signature(df: DataFrame):
+    """Eagerly localCheckpoint ``df`` and return (checkpointed_df,
+    signature) where signature = (count, bit_xor of row hashes, min v)
+    — an overflow-safe change detector (ids are xxhash64-scale, so
+    arithmetic sums overflow ANSI). The signature rides the CHECKPOINT
+    materialization itself via an in-plan ``observe`` (CollectMetrics
+    is a row-level pass-through, so the checkpointed data is
+    untouched): one Spark job per CC round where a separate
+    ``agg().collect()`` used to cost a second driver-synced job —
+    measured delivery works for the eager-checkpoint action."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    out = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.expr("bit_xor(xxhash64(u, v))").alias("s"),
+        F.min("v").alias("m"),
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    return out, (m["n"], m["s"], m["m"])
+
+
+def drop_checkpoint(df: DataFrame) -> None:
+    """Release a localCheckpoint. ``DataFrame.unpersist`` does not: the
+    blocks belong to the RDD that the checkpoint's LogicalRDD wraps."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _normalize_ckpt(pairs: DataFrame):
+    """(u, v) pairs -> checkpointed undirected edge set with u > v:
+    self-loops dropped, each pair oriented by greatest/least, duplicates
+    removed, then _ckpt_with_signature. The initial step and every CC
+    round end here."""
+    return _ckpt_with_signature(
+        pairs.filter(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct()
+    )
+
+
+def connected_components(
+    edges: DataFrame, max_iterations: int = 20, held: ExitStack | None = None
+) -> DataFrame:
+    """(src, dst) undirected edges -> (id, component) with component =
+    min node id in the component. Each round applies large-star and
+    small-star at once: every member of u's closed neighbourhood links
+    to m_u = min(N(u) ∪ {u}), computed as ONE groupBy over both edge
+    orientations (min + collect_list of the neighbours) and no join.
+    Deterministic; loops terminate when the edge set stops changing
+    (checked via a cheap aggregate signature collected BY the
+    per-round checkpoint job — see _ckpt_with_signature).
+
+    Skew: collect_list holds a node's whole neighbour list in one row,
+    so a hub's edges meet on one reducer (as any groupBy or join keyed
+    on the node would send them); not measured at web scale.
+
+    If ``max_iterations`` stops the loop early, every node with an edge
+    to another node still gets a row, labelled with a node of its own
+    component.
+
+    Each round's checkpoint is released once the next one is
+    materialized. The last one is read by the returned plan: it is
+    registered on ``held``, whose close releases it, when given."""
+    spark = edges.sparkSession
+    # the checkpoint cuts the upstream DAG once — edge construction may
+    # sit on an expensive lineage (model inference); every CC round
+    # would otherwise recompute it. Its observed count also answers the
+    # emptiness probe.
+    e, prev_sig = _normalize_ckpt(
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    )
+    if prev_sig[0] == 0:
+        drop_checkpoint(e)
+        # built on the JVM: an empty createDataFrame is a Python RDD
+        return spark.range(0).select("id", F.col("id").alias("component"))
+
+    # Seeding prev_sig with the INITIAL edge signature adds one extra
+    # exit opportunity (an already-converged star graph breaks after
+    # round 1 instead of 2); the round map is a deterministic function
+    # of e, so breaking on e_k == e_{k-1} yields the same final e.
+    for _ in range(max_iterations):
+        star = (
+            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .groupBy("u")
+            .agg(F.min("v").alias("mn"), F.collect_list("v").alias("vs"))
+        )
+        # the checkpoint truncates lineage each round — the iterated
+        # plan otherwise grows every round — and its observe carries
+        # the convergence signature for free
+        nxt, sig = _normalize_ckpt(
+            star.select(
+                F.explode(F.concat("vs", F.array("u"))).alias("u"),
+                F.least("mn", "u").alias("v"),
+            )
+        )
+        drop_checkpoint(e)
+        e = nxt
+        if sig == prev_sig:
+            break
+        prev_sig = sig
+    if held is not None:
+        held.callback(drop_checkpoint, e)
+
+    # each u takes its smallest linked v; every v also labels itself,
+    # which covers the roots (and, when the loop was cut short, nodes
+    # seen only as a smaller end)
+    return (
+        e.union(e.select(F.col("v").alias("u"), "v"))
+        .groupBy(F.col("u").alias("id"))
+        .agg(F.min("v").alias("component"))
+    )
 
 
 def near_dup_canonical(
@@ -358,17 +482,11 @@ def near_dup_canonical(
     the result is consumed; without, the ContextCleaner frees them once
     the result is unreachable. A checkpoint is lost with its executor,
     so such a loss fails the job fast (as the CC rounds always have)."""
-    from ..kg.canonicalize import _drop_checkpoint, connected_components  # local: avoids cycle
-
     hashed, groups = content_groups(docs, text_col)
-    groups = groups.localCheckpoint(eager=True)
+    groups, edges = near_dup_edges(groups, threshold, width, max_bucket_size)
     if held is not None:
-        held.callback(_drop_checkpoint, groups)
-    reps = groups.select(F.col("rep_id").alias("doc_id"), "text")
-    comps = connected_components(
-        near_dup_edges(reps, threshold, width=width, max_bucket_size=max_bucket_size),
-        held=held,
-    )
+        held.callback(drop_checkpoint, groups)
+    comps = connected_components(edges, held=held)
     rep_canon = groups.join(
         comps, F.col("rep_id") == comps["id"], "left"
     ).select(

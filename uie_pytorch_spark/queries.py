@@ -1784,8 +1784,9 @@ def canonicalize_surface_forms(spark, sf_dir):
     """∅J6-lite: normalize surface forms (lower/trim/strip punct) and
     assign the min doc_id as canonical entity id — the exact-match
     tier of entity canonicalization (MinHash tier: lsh_candidate_pairs;
-    CC tier: kg/canonicalize.py, oracle-free). ``spread`` (round 6)
-    floors the scan parallelism for the per-token regex work."""
+    CC tier: operators/dedup.connected_components, oracle-free).
+    ``spread`` (round 6) floors the scan parallelism for the per-token
+    regex work."""
     from .operators.util import spread
 
     d = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
